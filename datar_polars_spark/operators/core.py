@@ -22,6 +22,7 @@ from ..plans.selection import resolve_selection
 from ..plans.verb import verb
 from ..tibble import Tibble
 from ..functions.across import Across, expand_across
+from ..functions.aggregates import fused_quantile_probs
 from ..functions.registry import tree_needs_gid, tree_needs_order, tree_needs_pos
 
 __all__ = [
@@ -594,22 +595,22 @@ def summarise(td: Tibble, *args: Any, _groups: str | None = None, **kwargs: Any)
     ctx = EvalContext(td, "agg")
     gvars = list(td.group_vars)
 
-    agg_cols: list[Column] = []
-    created: list[str] = []
+    direct: list[tuple[str, Any]] = []
     deferred: list[tuple[str, Any]] = []
+    created: set[str] = set()
     for name, node in items:
-        refs = collect_refs(node)
-        if created and (refs & set(created)):
-            # dependent expression referencing a just-created aggregate:
-            # second pass as withColumn (reference summarise.py:150-158)
-            deferred.append((name, node))
-            created.append(name)
-            continue
+        # dependent expression referencing a just-created aggregate:
+        # second pass as withColumn (reference summarise.py:150-158)
+        (deferred if collect_refs(node) & created else direct).append((name, node))
+        created.add(name)
+    # median/quantile on one argument share one percentile buffer
+    ctx.quantile_probs = fused_quantile_probs(node for _, node in direct)
+    agg_cols: list[Column] = []
+    for name, node in direct:
         col = eval_expr(node, ctx)
         if not isinstance(col, Column):
             col = F.lit(col)
         agg_cols.append(col.alias(name))
-        created.append(name)
 
     if not agg_cols and not gvars:
         # bare summarise(): one row, no columns (reference

@@ -63,6 +63,10 @@ class EvalContext:
         # pass by apply_pending_group_aggs()
         self.allow_agg_join: bool = False
         self.pending_group_aggs: dict[str, Column] = {}
+        # summarise only: argument repr -> the literal probabilities its
+        # median/quantile calls request, compiled to one shared
+        # percentile(x, array(p, ...)) buffer (fused_quantile_probs)
+        self.quantile_probs: dict[str, tuple[float, ...]] = {}
         # memo for the tiny eager jobs the two-pass window rewrites run
         # at plan build (per-bucket offsets, quantile boundaries): a
         # mutate with several window items shares one EvalContext, so

@@ -11,6 +11,7 @@ tooling); these exist because distributed joins/aggs need them.
 from __future__ import annotations
 
 import math
+import re
 from typing import Any
 
 from pyspark.sql import functions as F
@@ -122,6 +123,23 @@ def partition_sizes(td: Any) -> Tibble:
     return Tibble(out)
 
 
+def _feeds_sketch(lines: list[str], i: int) -> bool:
+    """True when the nearest aggregate above plan line ``i`` (tree-string
+    ancestors: the closest earlier lines at a smaller depth) holds an
+    approx_count_distinct / percentile buffer."""
+    def depth(line: str) -> int:
+        return len(re.match(r"[ :+-]*", line).group(0))
+
+    d = depth(lines[i])
+    for up in reversed(lines[:i]):
+        if depth(up) >= d:
+            continue
+        if "Aggregate(" in up:
+            return bool(re.search(r"(approx_count_distinct|percentile(_approx)?)\(", up))
+        d = depth(up)
+    return False
+
+
 def plan_lint(td: Any) -> list[dict]:
     """Static lint of a frame's PHYSICAL plan for distributed-scale
     antipatterns — run before launching a job against a full-scale
@@ -138,6 +156,13 @@ def plan_lint(td: Any) -> list[dict]:
     - ``python-row-udf`` (warn): BatchEvalPython — row-at-a-time Python
       in the executor loop (Arrow/pandas UDFs show as ArrowEvalPython /
       FlatMapGroupsInPandas and are not flagged).
+    - ``sketch-in-expand`` (warn): the ``Expand`` of Spark's
+      multi-distinct rewrite (several ``count(DISTINCT)`` over different
+      columns) feeds an aggregate carrying an ``approx_count_distinct``
+      or ``percentile`` buffer — that aggregate is keyed by every
+      distinct value of every counted column, so each key carries its
+      own sketch/percentile buffer. Cube/rollup ``Expand`` nodes are
+      not flagged.
     - ``unpushed-filter`` (warn): a parquet scan whose Filter parent
       pushed nothing down (``PushedFilters: []`` with a Filter above) —
       the scan reads every row group.
@@ -204,15 +229,23 @@ def plan_lint(td: Any) -> list[dict]:
         add("python-row-udf", "warn",
             "BatchEvalPython: row-at-a-time Python UDF in the hot path "
             "(use pandas_udf / built-in functions)")
-    import re as _re
-
-    for scan in _re.finditer(r"PushedFilters: \[(.*?)\]", plan):
+    # the multi-distinct rewrite's Expand emits a `gid` column (cube and
+    # rollup emit `spark_grouping_id`)
+    if any(
+        "Expand [" in line and re.search(r"\bgid#", line) and _feeds_sketch(lines, i)
+        for i, line in enumerate(lines)
+    ):
+        add("sketch-in-expand", "warn",
+            "Expand (multi-distinct rewrite) feeds an aggregate holding a "
+            "sketch/percentile buffer per distinct key: count each column "
+            "with n_distinct (single-buffer collect_set) instead")
+    for scan in re.finditer(r"PushedFilters: \[(.*?)\]", plan):
         if scan.group(1).strip() == "" and "Filter" in plan[: scan.start()]:
             add("unpushed-filter", "warn",
                 "parquet scan with empty PushedFilters below a Filter: "
                 "predicate did not reach the scan")
             break
-    for m in _re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
+    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         ncols = m.group(1).count(",") + 1 if m.group(1) else 0
         if ncols >= 20:
             add("wide-scan", "info",

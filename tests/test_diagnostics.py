@@ -110,6 +110,29 @@ class TestPlanLint:
         hits = [x for x in plan_lint(td) if x["rule"] == "global-sort"]
         assert hits and hits[0]["severity"] == "info"
 
+    def test_flags_sketch_in_expand(self, spark):
+        from pyspark.sql import functions as F
+
+        from datar_polars_spark.scale import plan_lint
+        from datar_polars_spark.tibble import Tibble
+
+        df = spark.range(20).select(
+            (F.col("id") % 2).alias("g"), (F.col("id") % 3).alias("a"),
+            (F.col("id") % 5).alias("b"),
+        )
+        two_distinct = df.groupBy("g").agg(F.count_distinct("a"), F.count_distinct("b"))
+        with_sketch = df.groupBy("g").agg(
+            F.count_distinct("a"), F.count_distinct("b"), F.approx_count_distinct("a")
+        )
+        cube = df.cube("g", "a").agg(F.approx_count_distinct("b"))
+
+        def rules(d):
+            return {x["rule"]: x["severity"] for x in plan_lint(Tibble(d))}
+
+        assert rules(with_sketch).get("sketch-in-expand") == "warn"
+        assert "sketch-in-expand" not in rules(two_distinct)
+        assert "sketch-in-expand" not in rules(cube)
+
     def test_no_spark_job(self, spark):
         from datar_polars_spark import f, group_by, mutate, read_parquet
         from datar_polars_spark.functions import mean
