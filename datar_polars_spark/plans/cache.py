@@ -26,6 +26,7 @@ user asked for are the user's to manage.
 from __future__ import annotations
 
 import os
+import weakref
 from collections import OrderedDict
 from itertools import count
 from typing import TYPE_CHECKING
@@ -40,6 +41,11 @@ __all__ = ["register_internal_cache", "unregister_internal_cache",
 _seq = count()
 # token -> (df, safe_to_evict); insertion-ordered for FIFO eviction
 _caches: "OrderedDict[int, tuple[DataFrame, bool]]" = OrderedDict()
+
+_CLEAN_CHECKPOINTS = "spark.cleaner.referenceTracking.cleanCheckpoints"
+# SparkContexts already warned about uncleaned checkpoints; weak, so an
+# entry goes away with its context
+_warned_checkpoint_contexts: "weakref.WeakSet" = weakref.WeakSet()
 
 
 def _max_caches() -> int:
@@ -131,11 +137,34 @@ def reliable_checkpoint(df: "DataFrame", eager: bool = True) -> "DataFrame":
     ``checkpoint`` instead: blocks live in the fault-tolerant store and
     survive executor loss. With no checkpoint dir configured (local
     mode, tests, bench) the behaviour — and the physical plan — is
-    exactly the r14 ``localCheckpoint``."""
+    exactly the r14 ``localCheckpoint``.
+
+    Storage left behind: local-checkpoint blocks are released by the
+    ContextCleaner once their plan is garbage-collected. Reliable
+    checkpoint files are deleted only when
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (a
+    SparkContext setting, fixed at startup); otherwise every call
+    leaves its files in the checkpoint dir until the application
+    removes them. That case logs one warning per SparkContext."""
     try:
-        has_dir = df.sparkSession.sparkContext.getCheckpointDir() is not None
+        sc = df.sparkSession.sparkContext
+        ckpt_dir = sc.getCheckpointDir()
     except Exception:
-        has_dir = False
-    if has_dir:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        ckpt_dir = None
+    if ckpt_dir is None:
+        return df.localCheckpoint(eager=eager)
+    if sc not in _warned_checkpoint_contexts:
+        _warned_checkpoint_contexts.add(sc)
+        clean = sc.getConf().get(_CLEAN_CHECKPOINTS, "false")
+        if str(clean).strip().lower() != "true":
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "reliable_checkpoint: %s is not true, so checkpoint "
+                "files written under %s are never deleted; set it when "
+                "the session starts to have the ContextCleaner remove "
+                "them",
+                _CLEAN_CHECKPOINTS,
+                ckpt_dir,
+            )
+    return df.checkpoint(eager=eager)

@@ -34,36 +34,11 @@ from .dedup_index import (  # noqa: F401
     match_against_index,
     dedup_against_index,
 )
-from .image_index import (  # noqa: F401
-    image_index_build,
-    image_index_append,
-    image_index_compact,
-    image_index_delete,
-    image_index_expire,
-    image_index_stats,
-    match_against_image_index,
-    dedup_against_image_index,
-)
-from .audio_index import (  # noqa: F401
-    audio_index_build,
-    audio_index_append,
-    audio_index_compact,
-    audio_index_delete,
-    audio_index_expire,
-    audio_index_stats,
-    match_against_audio_index,
-    dedup_against_audio_index,
-)
-from .video_index import (  # noqa: F401
-    video_index_build,
-    video_index_append,
-    video_index_compact,
-    video_index_delete,
-    video_index_expire,
-    video_index_stats,
-    match_against_video_index,
-    dedup_against_video_index,
-)
+from .fp_index import INDEX_API as _FP_INDEX_API
+
+# image/audio/video_index_{build,append,compact,delete,expire,stats},
+# match_against_*_index and dedup_against_*_index
+globals().update(_FP_INDEX_API)
 from .semantic_index import (  # noqa: F401
     semantic_index_build,
     semantic_index_append,

@@ -22,6 +22,7 @@ from ..plans.cache import register_internal_cache
 from ..plans.expr import Ref
 from ..plans.verb import verb, verb2
 from ..tibble import Tibble, ensure_tibble
+from .lsh import hyperplane_band_udf, minhash_banded
 
 __all__ = [
     "dedup_exact",
@@ -311,7 +312,16 @@ def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
     OPTIMIZATION_r15.md). Hash values are bit-identical to
     ``xxhash64(shingle, lit(i))``, so signatures are unchanged; still a
     narrow per-row map (no aggregation, no state), which is what
-    stream_near_dedup needs."""
+    stream_near_dedup needs.
+
+    Contract: the result is a NONDETERMINISTIC pandas-UDF column (the
+    flag stops Catalyst from duplicating or reordering the kernel), so
+    it needs pandas and pyarrow on the driver and the executors. Use it
+    in Project and Filter contexts (``select``/``withColumn``/
+    ``filter``) — sign in a projection first and aggregate, join or
+    explode the signed column. Spark's analyzer rejects it as an
+    aggregate-function argument and inside a join condition, and
+    generate contexts are not part of the contract."""
     h0s = F.transform(shingles, lambda s: F.xxhash64(s))
     # NULL and empty shingle arrays yield all-null signatures
     # (array_min of nothing); the kernel preserves that exact contract
@@ -420,30 +430,6 @@ def _cap_buckets(
                 max_bucket,
             )
     return banded.join(F.broadcast(oversized), on=keys, how="left_anti")
-
-
-def _banded(df: DataFrame, sig: str, bands: int, rows_per_band: int) -> DataFrame:
-    """Explode a signature to (band_idx, band_hash) LSH buckets.
-
-    One ``transform`` over a band-index sequence instead of ``bands``
-    unrolled struct expressions: band-hash values are identical (same
-    comma-joined string per band — array_join skips NULLs exactly like
-    concat_ws), but codegen compiles a single loop, trimming the cold
-    path the same way the minhash_signature fold does."""
-    idx = F.sequence(F.lit(0), F.lit(bands - 1))
-    bh = F.transform(
-        idx,
-        lambda b: F.xxhash64(
-            F.array_join(
-                F.transform(
-                    F.slice(F.col(sig), b * rows_per_band + 1, rows_per_band),
-                    lambda v: v.cast("string"),
-                ),
-                ",",
-            )
-        ),
-    )
-    return df.select("*", F.posexplode(bh).alias("band", "bhash"))
 
 
 def _shingles(col: Column, shingle_words: int, analyzer: str,
@@ -572,7 +558,7 @@ def minhash_pairs(
     # join each side's signature back exactly once from the persisted
     # signature frame. At sf0.1 the two extra joins cost ~0.2 s of
     # fixed overhead; the byte savings dominate from sf1 up.
-    banded = _banded(base.select("id", "sig"), "sig", bands, rows_per_band)
+    banded = minhash_banded(base.select("id", "sig"), "sig", bands, rows_per_band)
     banded = _cap_buckets(
         banded.select("band", "bhash", "id"),
         ["band", "bhash"], max_bucket, log_dropped, op="minhash_pairs"
@@ -669,7 +655,7 @@ def minhash_join(
         # NARROW candidate generation (guide §2.3 / §8, same A/B as
         # minhash_pairs): bare ids through the bucket join, signatures
         # joined back once after the pair dedup
-        banded = _banded(sig.select("id", "sig"), "sig", bands, rows_per_band)
+        banded = minhash_banded(sig.select("id", "sig"), "sig", bands, rows_per_band)
         banded = _cap_buckets(
             banded.select("band", "bhash", "id"),
             ["band", "bhash"], max_bucket, log_dropped, op="minhash_join"
@@ -1189,8 +1175,6 @@ def embedding_cosine_pairs(
     bands (OR), or pre-cluster with IVF (scale/similarity.py)."""
     _DROPPED_PAIRS["embedding_cosine_pairs"] = []
     ename, idn = _name_of(embedding), _name_of(id_col)
-    from pyspark.sql.functions import pandas_udf
-
     base = _ensure_parallelism(
         td.df.select(F.col(idn).alias("id"), F.col(ename).alias("vec"))
     )
@@ -1200,25 +1184,11 @@ def embedding_cosine_pairs(
             [], "id_a long, id_b long, cos double"
         )
         return Tibble(empty)
-    dim = len(first[0])
-    # plane matrix generated once on the driver (deterministic seed) and
-    # shipped in the UDF closure; signatures are one matmul per Arrow
-    # batch — the 100 TB path (the expression-tree alternative is
-    # bands*planes array-aggregates, whose codegen alone takes seconds)
-    planes = np.random.RandomState(seed).standard_normal(
-        (bands * planes_per_band, dim)
+    band_hashes = hyperplane_band_udf(
+        seed, len(first[0]), bands, planes_per_band
     )
-    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def _band_hashes(vecs: pd.Series) -> pd.Series:
-        M = np.vstack(vecs.to_numpy()).astype(np.float64)
-        bits = (M @ planes.T) > 0  # (n, bands*planes_per_band)
-        H = bits.reshape(len(M), bands, planes_per_band) @ weights  # (n, bands)
-        return pd.Series(list(H.astype(np.int64)))
-
     banded = (
-        base.withColumn("__bh__", _band_hashes(F.col("vec")))
+        base.withColumn("__bh__", band_hashes(F.col("vec")))
         .select(
             "id",
             "vec",
@@ -1393,7 +1363,6 @@ def embedding_join(
 
     # mode == "lsh": shared hyperplane family, banded, capped, verified
     from pyspark import StorageLevel
-    from pyspark.sql.functions import pandas_udf
 
     first = (
         left.df.select(ename).where(F.col(ename).isNotNull()).first()
@@ -1405,26 +1374,16 @@ def embedding_join(
                 [], f"id_a {ta}, id_b {tb}, cos double"
             )
         )
-    dim = len(first[0])
-    planes = np.random.RandomState(seed).standard_normal(
-        (bands * planes_per_band, dim)
+    band_hashes = hyperplane_band_udf(
+        seed, len(first[0]), bands, planes_per_band
     )
-    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def _band_hashes(vecs: pd.Series) -> pd.Series:
-        M = np.vstack(vecs.to_numpy()).astype(np.float64)
-        bits = (M @ planes.T) > 0
-        H = bits.reshape(len(M), bands, planes_per_band) @ weights
-        return pd.Series(list(H.astype(np.int64)))
-
     sides = []
     for td_, tag in ((left, "a"), (right, "b")):
         base = _ensure_parallelism(
             td_.df.select(F.col(idn).alias("id"), F.col(ename).alias("vec"))
             .where(F.col(ename).isNotNull())
         )
-        banded = base.withColumn("__bh__", _band_hashes(F.col("vec"))).select(
+        banded = base.withColumn("__bh__", band_hashes(F.col("vec"))).select(
             "id", "vec", F.posexplode(F.col("__bh__")).alias("band", "bhash")
         )
         banded = register_internal_cache(

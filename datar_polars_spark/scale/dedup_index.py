@@ -58,7 +58,6 @@ from pyspark.sql import functions as F
 
 from ..tibble import Tibble, ensure_tibble
 from .dedup import (
-    _banded,
     _cap_buckets,
     _DROPPED_PAIRS,
     _minhash_sigs,
@@ -66,6 +65,7 @@ from .dedup import (
     _shingles,
 )
 from .jsonio import read_json_file, write_json_file
+from .lsh import minhash_banded
 from ..plans.cache import reliable_checkpoint
 from .tombstones import (
     append_tombstones,
@@ -213,7 +213,7 @@ def _build_stores(
             # exceed the cap across increments; rebuild when that
             # matters.
             bands = _cap_buckets(
-                _banded(sigs, "sig", meta["bands"], rows_per_band),
+                minhash_banded(sigs, "sig", meta["bands"], rows_per_band),
                 ["band", "bhash"], meta["max_bucket"],
                 op=op,
             ).select("band", "bhash", "id", "stamp")
@@ -557,9 +557,12 @@ def match_against_index(
     # an executor loss mid-match fails the job instead of recomputing
     # (locally invisible, real on clusters) — configure a checkpoint
     # dir and reliable_checkpoint switches these cuts to fault-
-    # tolerant storage. Lifetime: the checkpointed blocks are released
-    # by the ContextCleaner when the plan is GC'd, which matches this
-    # hit set's one-call scope.
+    # tolerant storage. Lifetime: local-checkpoint blocks are released
+    # by the ContextCleaner once the plan is GC'd, which matches this
+    # hit set's one-call scope. Reliable-checkpoint files are deleted
+    # only when spark.cleaner.referenceTracking.cleanCheckpoints=true;
+    # otherwise they stay in the checkpoint dir (reliable_checkpoint
+    # warns once per SparkContext).
     from pyspark import StorageLevel
 
     hits_fp = (
@@ -606,7 +609,7 @@ def match_against_index(
     # signature rides the bucket join once PER COLLIDING BAND if
     # carried here; dedupe bare pairs first, join payloads back once
     banded_a = _pin(_cap_buckets(
-        _banded(sig_a, "sig", meta["bands"], rows_per_band),
+        minhash_banded(sig_a, "sig", meta["bands"], rows_per_band),
         ["band", "bhash"], max_bucket, log_dropped, op="match_against_index",
     ).select("band", "bhash", F.col("id").alias("id_a")))
     # the store was capped at build/append time (see _build_stores) —

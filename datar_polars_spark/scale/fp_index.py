@@ -1,8 +1,12 @@
-"""Generic persistent 64-bit-fingerprint index engine.
+"""Persistent 64-bit-fingerprint indexes: incremental image, audio and
+video dedup against an on-lake store.
 
-The image index (scale/image_index.py) and the audio index
-(scale/audio_index.py) are the SAME data structure over different
-perceptual hash functions: a 64-bit fingerprint per item, stored as
+The image, audio and video indexes are the SAME data structure over
+different perceptual hash functions (64-bit dHash, spectral hash and
+temporal-median dHash — multimodal.image_dhash / audio_fingerprint /
+video_fingerprint): a 64-bit fingerprint per item, computed ONCE for
+the corpus and persisted next to the data, so each incoming batch
+hashes only ITSELF and equi-joins the stores. Under ``<path>/``:
 
 - ``hashes/``: (id, <fp>) — one 16-byte row per indexed item.
 - ``postings/`` (partitioned by ``band``): (band, bval, id, <fp>) —
@@ -14,12 +18,15 @@ perceptual hash functions: a 64-bit fingerprint per item, stored as
   budget). Bands are pinned at build time: matching with a larger
   ``max_hamming`` than the build's would silently lose the pigeonhole
   guarantee, so it is rejected.
-- ``<sidecar>.json``: the parameter sidecar.
+- ``<name>_index.json``: the parameter sidecar.
 
 This module holds the engine once, parameterized by a tiny family
 descriptor (:class:`FpFamily`): the modality-specific pieces are the
 hash function (one Arrow pass producing the (id, fingerprint) frame),
-the fingerprint column name, and the naming/op strings. Everything
+the fingerprint column name, the default Hamming budget, and the
+naming/op strings. The public ``<name>_index_*``,
+``match_against_<name>_index`` and ``dedup_against_<name>_index``
+functions are generated from the :data:`FAMILIES` table. Everything
 scale-critical — the banded layout, the exact-hash pre-join, the
 one-representative-per-distinct-fingerprint candidate generation, the
 broadcast pinning, bucket caps with drop accounting, tombstone
@@ -33,11 +40,18 @@ join — candidates generate from ONE representative per distinct
 fingerprint (a replica-heavy batch pays distinct-fingerprint cost)
 and fan back out. NULL-content and NULL-id batch rows never match and
 always survive dedup (the index family's NULL contract).
+
+Source caveats are the fingerprint ops': PNG/BMP/baseline-JPEG
+rasters, raw-PCM WAV/AIFF waveforms and MJPEG-AVI frames decode for
+real and get the perceptual property; other containers hash a
+deterministic content-keyed stub (exact-content identity only) or
+raise with ``strict=True``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 from typing import Any, Callable
 
 from pyspark.sql import functions as F
@@ -45,6 +59,7 @@ from pyspark.sql import functions as F
 from ..tibble import Tibble, ensure_tibble
 from .dedup import _cap_buckets, _DROPPED_PAIRS, _ensure_parallelism, _name_of
 from .jsonio import read_json_file, replace_dir, write_json_file
+from .lsh import fp_banded
 from ..plans.cache import reliable_checkpoint
 from .tombstones import (
     append_tombstones,
@@ -53,7 +68,7 @@ from .tombstones import (
     tombstones_df,
 )
 
-__all__ = ["FpFamily", "band_cols"]
+__all__ = ["FpFamily", "FAMILIES"]
 
 # a hashed batch row is 16 bytes (8-byte id-ish key + 8-byte
 # fingerprint): 4M rows broadcast as a ~64 MB hash relation — cheap on
@@ -74,10 +89,11 @@ class FpFamily:
     ``__stamp__`` column; the hash pass carries it through untouched
     and returns it as ``stamp``."""
 
-    name: str  # "image" / "audio" — derives op + error strings
+    name: str  # "image" / "audio" / "video" — derives op + error strings
     fp_col: str  # fingerprint column name in the stores
     count_key: str  # stats key for the hashes/ row count
     hash_base: Callable[..., Any]
+    default_max_hamming: int = 4  # build-time budget when none is given
 
     @property
     def format(self) -> str:
@@ -93,31 +109,6 @@ class FpFamily:
     @property
     def op_match(self) -> str:
         return f"match_against_{self.name}_index"
-
-
-def band_cols(fp, n_bands: int):
-    """The fingerprint's ``n_bands`` disjoint bit bands as (band, bval)
-    structs — pure JVM shifts/masks, shared with the *_near_dup_pairs
-    batch operators and the streaming consumers.
-
-    A full-width band (n_bands=1, i.e. max_hamming=0) keeps the raw
-    hash as its value: the 64-bit mask (1<<64)-1 overflows a signed
-    long and py4j's F.lit would raise NumberFormatException, and no
-    mask is needed when the band IS the whole fingerprint."""
-    out = []
-    for i in range(n_bands):
-        lo = (i * 64) // n_bands
-        hi = ((i + 1) * 64) // n_bands
-        width = hi - lo
-        shifted = F.shiftrightunsigned(fp, lo)
-        bval = (
-            shifted if width >= 64
-            else shifted.bitwiseAND(F.lit((1 << width) - 1))
-        )
-        out.append(
-            F.struct(F.lit(i).alias("band"), bval.alias("bval"))
-        )
-    return out
 
 
 def _stamp_expr(df, stamp, op: str):
@@ -170,12 +161,8 @@ def _index_frames(fam: FpFamily, base, meta: dict, op: str):
     physically — no id-list join anywhere in the retention path."""
     fp = fam.fp_col
     postings = _cap_buckets(
-        base.select(
-            "id", fp, "stamp",
-            F.explode(F.array(*band_cols(F.col(fp),
-                                         meta["bands"]))).alias("b"),
-        ).select(F.col("b.band").alias("band"),
-                 F.col("b.bval").alias("bval"), "id", fp, "stamp"),
+        fp_banded(base, fp, meta["bands"], ["id", fp, "stamp"])
+        .select("band", "bval", "id", fp, "stamp"),
         ["band", "bval"], meta["max_bucket"], op=op,
     )
     return base, postings
@@ -555,11 +542,7 @@ def fp_match_with_base(
     # dominate); identical pairs are the exact leg's — excluded here
     reps = base.select(F.col("fp_a").alias("fp")).dropDuplicates()
     banded = _cap_buckets(
-        reps.select(
-            "fp", F.explode(F.array(*band_cols(F.col("fp"),
-                                               meta["bands"]))).alias("b")
-        ).select("fp", F.col("b.band").alias("band"),
-                 F.col("b.bval").alias("bval")),
+        fp_banded(reps, "fp", meta["bands"], ["fp"]),
         ["band", "bval"], max_bucket, op=op,
     )
     # v2 postings carry the fingerprint inline, so the Hamming verify
@@ -709,3 +692,179 @@ def fp_index_compact(fam: FpFamily, spark, path: str) -> dict:
     out = fp_index_stats(fam, spark, path)
     out["dropped_pairs"] = dropped
     return out
+
+
+# --------------------------------------------------------------------------
+# the modality table and the public per-modality functions
+# --------------------------------------------------------------------------
+
+def hash_base(fp_op: str, fp_col: str, df, cname: str, idn: str, strict: bool):
+    """(id, <fp_col>, stamp) for every row with both an id and hashable
+    content — the one Arrow decode+hash pass the engine builds
+    everything on. ``fp_op`` names the public fingerprint op of
+    scale/multimodal.py that hashes the content."""
+    from . import multimodal
+
+    return (
+        getattr(multimodal, fp_op)(
+            Tibble(df.select(F.col(idn).alias("id"),
+                             F.col(cname).alias("__content__"),
+                             "__stamp__")),
+            "__content__", out_col=fp_col, strict=strict,
+        )
+        .df.select("id", fp_col, F.col("__stamp__").alias("stamp"))
+        .filter(F.col("id").isNotNull() & F.col(fp_col).isNotNull())
+    )
+
+
+def _family(name, fp_col, count_key, fp_op, default_max_hamming):
+    return FpFamily(
+        name=name, fp_col=fp_col, count_key=count_key,
+        hash_base=partial(hash_base, fp_op, fp_col),
+        default_max_hamming=default_max_hamming,
+    )
+
+
+# Budgets: spectral bits flip a little more under noise than dHash bits
+# do under brightness shifts (multimodal._afp64's measurements), and
+# JPEG re-quantization of noisy video frames can flip up to ~7 bits of
+# the temporal median (multimodal._vfp64's), hence 6 over image's 4.
+FAMILIES: dict[str, FpFamily] = {
+    fam.name: fam for fam in (
+        _family("image", "dhash", "n_images", "image_dhash", 4),
+        _family("audio", "afp", "n_clips", "audio_fingerprint", 6),
+        _family("video", "vfp", "n_videos", "video_fingerprint", 6),
+    )
+}
+# item noun of each modality, for the generated docstrings
+_NOUNS = {"image": "image", "audio": "clip", "video": "video"}
+
+
+def _index_api(fam: FpFamily) -> dict[str, Callable[..., Any]]:
+    """The eight public functions of one modality. Their docstrings are
+    templates over the family: {n} name, {it} item noun, {ck} count
+    key, {mh} default budget."""
+
+    def build(corpus: Any, content: Any, id_col: Any, path: str, *,
+              max_hamming: int = fam.default_max_hamming,
+              max_bucket: int = 10_000, strict: bool = False,
+              mode: str = "overwrite", stamp: int | str = 0) -> None:
+        """Build the persistent {n} index of ``corpus`` at ``path``: one
+        Arrow fingerprint pass + the banded postings write.
+        ``max_hamming`` (default {mh}) is pinned in the sidecar (it
+        fixes the band count and therefore the pigeonhole recall
+        guarantee); matching may tighten it but never widen it without
+        a rebuild."""
+        fp_index_build(
+            fam, corpus, content, id_col, path,
+            max_hamming=max_hamming, max_bucket=max_bucket,
+            strict=strict, mode=mode, stamp=stamp,
+        )
+
+    def append(batch: Any, path: str, content: Any = None,
+               id_col: Any = None, *, strict: bool = False,
+               stamp: int | str = 0) -> None:
+        """Append ``batch``'s fingerprints and postings to an existing
+        index (parameters from the sidecar; columns default to the
+        build-time names). Same id-dtype pinning as the sibling
+        indexes."""
+        fp_index_append(fam, batch, path, content, id_col,
+                        strict=strict, stamp=stamp)
+
+    def stats(spark, path: str, live: bool = False) -> dict:
+        """Sidecar parameters plus footer-only store row counts
+        (``live=True`` adds ``n_live`` — the matchable count with the
+        retention watermark and tombstones applied; costs a narrow
+        scan). ``{ck}``/``n_postings`` are PHYSICAL counts (footer
+        metadata, no data pages); ``n_tombstones`` counts ids masked
+        since the last compact — live rows are the difference."""
+        return fp_index_stats(fam, spark, path, live=live)
+
+    def delete(spark, path: str, ids: Any) -> dict:
+        """Tombstone ``ids`` out of the index: every match/dedup/stream
+        consumer masks them immediately; ``{n}_index_compact`` folds
+        them physically and clears the sidecar. Returns the post-delete
+        stats. See scale/tombstones.py for the mask-until-compact
+        contract (re-appending a tombstoned id requires a compact
+        first)."""
+        return fp_index_delete(fam, spark, path, ids)
+
+    def expire(spark, path: str, before: int) -> dict:
+        """Age-based retention — the TTL complement of the id-list
+        tombstones: raise the index's ``expire_before`` watermark so
+        every match/dedup/stream read immediately prunes rows stamped
+        (at build/append time, caller-defined units — e.g. a crawl
+        date) before ``before`` via a pushed-down scan predicate, and
+        the next ``{n}_index_compact`` drops them physically.
+        Monotonic, survives compaction; no id list or join anywhere —
+        expiry is one sidecar write. Same semantics across the sibling
+        indexes."""
+        return fp_index_expire(fam, spark, path, before)
+
+    def match(batch: Any, path: str, content: Any = None,
+              id_col: Any = None, *, max_hamming: int | None = None,
+              max_bucket: int = 10_000, strict: bool = False,
+              min_stamp: int | None = None) -> Tibble:
+        """All (batch {it}, indexed {it}) pairs within the Hamming
+        budget: columns (id_a, id_b, hamming), id_a from ``batch``.
+
+        Byte-identical fingerprints come from one narrow 8-byte hash
+        equi-join (hamming 0, every replica resolved there); near-dup
+        candidates band ONE representative per distinct batch
+        fingerprint against ``postings/`` (pigeonhole-exact within the
+        build budget) and fan back out, verified JVM-side with
+        ``bit_count(a ^ b)``. ``max_hamming`` may tighten the
+        build-time budget, never widen it (the band layout only
+        guarantees recall up to the build's)."""
+        pairs, _base = fp_match_with_base(
+            fam, batch, path, content, id_col,
+            max_hamming=max_hamming, max_bucket=max_bucket, strict=strict,
+            min_stamp=min_stamp,
+        )
+        return pairs
+
+    def dedup(batch: Any, path: str, content: Any = None,
+              id_col: Any = None, *, max_hamming: int | None = None,
+              max_bucket: int = 10_000, strict: bool = False,
+              append: bool = False, min_stamp: int | None = None,
+              stamp: int | str = 0) -> Tibble:
+        """Drop every ``batch`` row whose {n} matches an indexed {it}
+        within the Hamming budget; return survivors with their original
+        columns. ``append=True`` admits the survivors into the index
+        (materialized first — the family's read-after-append
+        contract)."""
+        return fp_dedup_against_index(
+            fam, batch, path, content, id_col,
+            max_hamming=max_hamming, max_bucket=max_bucket,
+            strict=strict, append=append, min_stamp=min_stamp, stamp=stamp,
+        )
+
+    def compact(spark, path: str) -> dict:
+        """Rewrite accumulated per-append file sets into one compact
+        range-clustered layout, folding byte-duplicate rows, tombstoned
+        ids (see {n}_index_delete), and re-applying the bucket cap
+        ACROSS increments — same lifecycle, swap discipline, and drop
+        accounting as the sibling indexes' compacts."""
+        return fp_index_compact(fam, spark, path)
+
+    fields = dict(n=fam.name, it=_NOUNS[fam.name], ck=fam.count_key,
+                  mh=fam.default_max_hamming)
+    api = {}
+    for name, fn in (
+        ("{n}_index_build", build), ("{n}_index_append", append),
+        ("{n}_index_stats", stats), ("{n}_index_delete", delete),
+        ("{n}_index_expire", expire), ("match_against_{n}_index", match),
+        ("dedup_against_{n}_index", dedup), ("{n}_index_compact", compact),
+    ):
+        fn.__name__ = fn.__qualname__ = name.format(**fields)
+        fn.__doc__ = fn.__doc__.format(**fields)
+        api[fn.__name__] = fn
+    return api
+
+
+INDEX_API: dict[str, Callable[..., Any]] = {
+    name: fn for fam in FAMILIES.values()
+    for name, fn in _index_api(fam).items()
+}
+globals().update(INDEX_API)
+__all__ += list(INDEX_API)

@@ -13,6 +13,7 @@ codecs and nothing else changes.
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 from typing import Any, Iterator
 
 from pyspark.sql import functions as F
@@ -639,7 +640,6 @@ def image_dhash(
     content: str = "content",
     out_col: str = "dhash",
     strict: bool = False,
-    batch_size: int = 256,
 ) -> Tibble:
     """Perceptual image fingerprint column (64-bit dHash, Spark long;
     NULL for NULL content) — the image-side analogue of the text
@@ -659,13 +659,43 @@ def image_dhash(
     (documented: exact-content identity only, no perceptual property)
     or raise with ``strict=True``. One Arrow ``mapInPandas`` pass, no
     shuffle."""
-    import pandas as pd
+    return _fp_column(
+        td, content, out_col, "image_dhash",
+        partial(_image_fp_one, strict=strict, op="image_dhash"),
+    )
 
+
+def _image_fp_one(bb: bytes, strict: bool, op: str) -> int:
+    """Fingerprint ONE image's bytes — shared by the batch column op
+    (image_dhash) and the streaming consumer (stream_image_dedup) so
+    both sides of an index match hash identically."""
     from .codecs import decode_raster
+
+    gray = decode_raster(bb)
+    if gray is None:
+        if strict:
+            raise NotImplementedError(
+                f"{op}(strict=True): pixel decode needs PNG/BMP/"
+                "baseline-JPEG (other containers require a real codec "
+                "library)"
+            )
+        gray = _stub_raster(bb)
+    return _dhash64(gray)
+
+
+def _fp_column(td: Tibble, content: str, out_col: str, op: str, fp_one):
+    """The one Arrow ``mapInPandas`` pass behind image_dhash,
+    audio_fingerprint and video_fingerprint: appends ``out_col`` =
+    ``fp_one(bytes)`` as a Spark long, NULL for NULL content.
+    Byte-identical content (the most common duplicate class in a
+    crawl) decodes once per Arrow batch — the memo keys reference this
+    batch's buffers only, so memory stays bounded by the batch
+    itself."""
+    import pandas as pd
 
     in_cols = [c for c in td.columns]
     if out_col in in_cols:
-        raise ValueError(f"image_dhash: column {out_col!r} already exists")
+        raise ValueError(f"{op}: column {out_col!r} already exists")
     schema = StructType(
         [td.df.select(*in_cols).schema[c] for c in in_cols]
         + [StructField(out_col, LongType())]
@@ -674,29 +704,14 @@ def image_dhash(
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
             hashes = []
-            # byte-identical content (the most common duplicate class
-            # in a crawl) decodes once per Arrow batch — the memo keys
-            # reference this batch's buffers only, so memory stays
-            # bounded by the batch itself
             memo: dict = {}
             for content_bytes in pdf[content]:
                 if content_bytes is None:
                     hashes.append(None)
                     continue
                 bb = bytes(content_bytes)
-                if bb in memo:
-                    hashes.append(memo[bb])
-                    continue
-                gray = decode_raster(bb)
-                if gray is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "image_dhash(strict=True): pixel decode "
-                            "needs PNG/BMP/baseline-JPEG (other "
-                            "containers require a real codec library)"
-                        )
-                    gray = _stub_raster(bb)
-                memo[bb] = _dhash64(gray)
+                if bb not in memo:
+                    memo[bb] = fp_one(bb)
                 hashes.append(memo[bb])
             pdf = pdf.copy()
             pdf[out_col] = pd.array(hashes, dtype="Int64")
@@ -704,7 +719,6 @@ def image_dhash(
 
     out = td.df.select(*in_cols).mapInPandas(batches, schema)
     return Tibble(out)
-
 
 
 def _fp_banded_pairs(base, max_hamming: int, max_bucket: int, op: str):
@@ -717,14 +731,10 @@ def _fp_banded_pairs(base, max_hamming: int, max_bucket: int, op: str):
     all-pairs compare — and verify JVM-side with ``bit_count``.
     Over-full buckets drop with their volume accounted under ``op``."""
     from .dedup import _cap_buckets
-    from .fp_index import band_cols
+    from .lsh import fp_banded
 
-    bands = band_cols(F.col("__fp__"), max_hamming + 1)
     banded = _cap_buckets(
-        base.select(
-            "id", "__fp__", F.explode(F.array(*bands)).alias("b")
-        ).select("id", "__fp__", F.col("b.band").alias("band"),
-                 F.col("b.bval").alias("bval")),
+        fp_banded(base, "__fp__", max_hamming + 1, ["id", "__fp__"]),
         ["band", "bval"], max_bucket, op=op,
     )
     left = banded.select(
@@ -845,7 +855,6 @@ def audio_fingerprint(
     content: str = "content",
     out_col: str = "afp",
     strict: bool = False,
-    batch_size: int = 256,
 ) -> Tibble:
     """Perceptual audio fingerprint column (64-bit spectral hash,
     Spark long; NULL for NULL content) — the audio-side analogue of
@@ -864,53 +873,29 @@ def audio_fingerprint(
     off the content hash (documented: exact-content identity only, no
     perceptual property) or raise with ``strict=True``. One Arrow
     ``mapInPandas`` pass, no shuffle."""
-    import pandas as pd
-
-    from .codecs import decode_pcm
-
-    in_cols = [c for c in td.columns]
-    if out_col in in_cols:
-        raise ValueError(
-            f"audio_fingerprint: column {out_col!r} already exists"
-        )
-    schema = StructType(
-        [td.df.select(*in_cols).schema[c] for c in in_cols]
-        + [StructField(out_col, LongType())]
+    return _fp_column(
+        td, content, out_col, "audio_fingerprint",
+        partial(_audio_fp_one, strict=strict, op="audio_fingerprint"),
     )
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            hashes = []
-            # byte-identical clips decode+FFT once per Arrow batch
-            # (memo keys reference this batch's buffers only)
-            memo: dict = {}
-            for content_bytes in pdf[content]:
-                if content_bytes is None:
-                    hashes.append(None)
-                    continue
-                bb = bytes(content_bytes)
-                if bb in memo:
-                    hashes.append(memo[bb])
-                    continue
-                pcm = decode_pcm(bb)
-                fp = None if pcm is None else _afp64(pcm[0], pcm[1])
-                if fp is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "audio_fingerprint(strict=True): waveform "
-                            "decode needs raw-PCM WAV/AIFF >= 256 "
-                            "samples (compressed containers require a "
-                            "real codec library)"
-                        )
-                    fp = _stub_audio_fp(bb)
-                memo[bb] = fp
-                hashes.append(fp)
-            pdf = pdf.copy()
-            pdf[out_col] = pd.array(hashes, dtype="Int64")
-            yield pdf
 
-    out = td.df.select(*in_cols).mapInPandas(batches, schema)
-    return Tibble(out)
+def _audio_fp_one(bb: bytes, strict: bool, op: str) -> int:
+    """Fingerprint ONE clip's bytes — shared by the batch column op
+    (audio_fingerprint) and the streaming consumer (stream_audio_dedup)
+    so both sides of an index match hash identically."""
+    from .codecs import decode_pcm
+
+    pcm = decode_pcm(bb)
+    fp = None if pcm is None else _afp64(pcm[0], pcm[1])
+    if fp is None:
+        if strict:
+            raise NotImplementedError(
+                f"{op}(strict=True): waveform decode needs raw-PCM "
+                "WAV/AIFF >= 256 samples (compressed containers require "
+                "a real codec library)"
+            )
+        fp = _stub_audio_fp(bb)
+    return fp
 
 
 def audio_near_dup_pairs(
@@ -1124,7 +1109,6 @@ def video_fingerprint(
     out_col: str = "vfp",
     strict: bool = False,
     n_frames: int = 8,
-    batch_size: int = 256,
 ) -> Tibble:
     """Perceptual video fingerprint column (64-bit temporal-median
     dHash, Spark long; NULL for NULL content) — the video member of
@@ -1146,42 +1130,11 @@ def video_fingerprint(
     stub keyed off the content hash (documented: exact-content
     identity only, no perceptual property) or raise with
     ``strict=True``. One Arrow ``mapInPandas`` pass, no shuffle."""
-    import pandas as pd
-
-    in_cols = [c for c in td.columns]
-    if out_col in in_cols:
-        raise ValueError(
-            f"video_fingerprint: column {out_col!r} already exists"
-        )
-    schema = StructType(
-        [td.df.select(*in_cols).schema[c] for c in in_cols]
-        + [StructField(out_col, LongType())]
+    return _fp_column(
+        td, content, out_col, "video_fingerprint",
+        partial(_video_fp_one, n_frames=n_frames, strict=strict,
+                op="video_fingerprint"),
     )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            hashes = []
-            # byte-identical clips walk the frame decode once per
-            # Arrow batch (memo keys reference this batch's buffers
-            # only) — per-frame JPEG decode is the expensive modality,
-            # so this matters most here
-            memo: dict = {}
-            for content_bytes in pdf[content]:
-                if content_bytes is None:
-                    hashes.append(None)
-                    continue
-                bb = bytes(content_bytes)
-                if bb not in memo:
-                    memo[bb] = _video_fp_one(
-                        bb, n_frames, strict, "video_fingerprint"
-                    )
-                hashes.append(memo[bb])
-            pdf = pdf.copy()
-            pdf[out_col] = pd.array(hashes, dtype="Int64")
-            yield pdf
-
-    out = td.df.select(*in_cols).mapInPandas(batches, schema)
-    return Tibble(out)
 
 
 def video_near_dup_pairs(

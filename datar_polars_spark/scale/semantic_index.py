@@ -37,8 +37,6 @@ from __future__ import annotations
 
 from typing import Any
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,6 +49,7 @@ from .dedup import (
     cosine_sim,
 )
 from .jsonio import read_json_file, write_json_file
+from .lsh import hyperplane_band_udf
 from ..plans.cache import reliable_checkpoint
 from .tombstones import (
     append_tombstones,
@@ -71,33 +70,6 @@ __all__ = [
 ]
 
 _FORMAT = "semantic-index"
-
-
-def _band_hash_udf(meta: dict):
-    """Arrow UDF computing the per-band hyperplane hashes — the same
-    (seed, dim)-keyed family as embedding_join's lsh mode, so an index
-    and any independently signed frame are directly comparable."""
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.random.RandomState(meta["seed"]).standard_normal(
-        (meta["bands"] * meta["planes_per_band"], meta["dim"])
-    )
-    bands, ppb = meta["bands"], meta["planes_per_band"]
-    weights = 1 << np.arange(ppb, dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def _hashes(vecs: pd.Series) -> pd.Series:
-        M = np.vstack(vecs.to_numpy()).astype(np.float64)
-        if M.shape[1] != planes.shape[1]:
-            raise ValueError(
-                f"semantic index: embedding dim {M.shape[1]} != index "
-                f"dim {planes.shape[1]}"
-            )
-        bits = (M @ planes.T) > 0
-        H = bits.reshape(len(M), bands, ppb) @ weights
-        return pd.Series(list(H.astype(np.int64)))
-
-    return _hashes
 
 
 def _build_stores(
@@ -144,7 +116,9 @@ def _build_stores(
     base = register_internal_cache(base.persist())
     banded = None
     try:
-        hashes = _band_hash_udf(meta)
+        hashes = hyperplane_band_udf(
+            meta["seed"], meta["dim"], meta["bands"], meta["planes_per_band"]
+        )
         # persist the banded frame: _cap_buckets consumes it twice
         # (bucket census + capped output), and an unpersisted frame
         # re-runs the Arrow hash pass over the whole corpus for each
@@ -501,7 +475,9 @@ def match_against_semantic_index(
         .filter(F.col("__eq__"))
         .select("id_a", "id_b", F.lit(1.0).alias("cos"))
     )
-    hashes = _band_hash_udf(meta)
+    hashes = hyperplane_band_udf(
+        meta["seed"], meta["dim"], meta["bands"], meta["planes_per_band"]
+    )
     # DISTINCT-VECTOR fuzzy candidate generation (r13): one
     # representative per distinct embedding hash is banded, bucketed
     # against the postings, and rep-verified; surviving matches fan

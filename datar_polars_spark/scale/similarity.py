@@ -214,8 +214,6 @@ def ivf_train(
     required sample exceeds ``DRIVER_KMEANS_MAX_SAMPLE`` the training
     runs as pyspark.ml distributed KMeans over the full frame instead
     of a driver-side loop — the centroid table stays tiny either way."""
-    import numpy as np
-
     col = _name_of(embedding)
     # Only the DEFAULTED sample size may auto-route to distributed
     # KMeans: an explicit sample_size is a deliberate caller choice
@@ -255,19 +253,7 @@ def ivf_train(
             )
             sample_size = DRIVER_KMEANS_MAX_SAMPLE
     X = _train_sample(td.df, col, sample_size, n, seed, "ivf_train")
-    rng = np.random.RandomState(seed)
-    cents = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)]
-    x2 = (X * X).sum(axis=1)
-    for _ in range(iters):
-        # assign via ||x-c||^2 = x.x - 2 x.c + c.c: one matmul, O(s*k)
-        # memory (the naive (s,k,dim) difference tensor is dim-times
-        # larger and blew past driver memory at moderate k)
-        d2 = x2[:, None] - 2.0 * (X @ cents.T) + (cents * cents).sum(axis=1)[None, :]
-        assign = d2.argmin(axis=1)
-        for ci in range(len(cents)):
-            members = X[assign == ci]
-            if len(members):
-                cents[ci] = members.mean(axis=0)
+    cents = _lloyd_np(X, n_clusters, iters, seed)
     return [[float(v) for v in c] for c in cents]
 
 
@@ -608,9 +594,8 @@ def knn_join(
 # ---------------------------------------------------------------------------
 
 def _lloyd_np(X, k: int, iters: int, seed: int):
-    """Driver-side Lloyd's k-means (same matmul formulation as
-    ivf_train's loop) — used per PQ subspace where k <= 256 and the
-    sample is small by construction."""
+    """Driver-side Lloyd's k-means: ivf_train's driver path and each PQ
+    subspace (k <= 256, sample small by construction)."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
@@ -618,6 +603,9 @@ def _lloyd_np(X, k: int, iters: int, seed: int):
     cents = X[rng.choice(len(X), size=k, replace=False)].copy()
     x2 = (X * X).sum(axis=1)
     for _ in range(iters):
+        # assign via ||x-c||^2 = x.x - 2 x.c + c.c: one matmul, O(s*k)
+        # memory (the naive (s,k,dim) difference tensor is dim-times
+        # larger and blew past driver memory at moderate k)
         d2 = x2[:, None] - 2.0 * (X @ cents.T) + (cents * cents).sum(axis=1)[None, :]
         assign = d2.argmin(axis=1)
         for ci in range(k):

@@ -1,5 +1,5 @@
 """Tombstone deletion for the persistent index family (dedup_index /
-semantic_index / image_index) — the takedown/retention path.
+semantic_index / fp_index) — the takedown/retention path.
 
 At corpus scale an id must be removable without rebuilding the index
 (a rebuild re-reads the whole corpus; takedowns are routine and small).

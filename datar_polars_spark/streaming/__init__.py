@@ -27,6 +27,7 @@ way. No collect() in any hot path.
 from __future__ import annotations
 
 import uuid
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -515,27 +516,6 @@ def stream_decontaminate(
 __all__.append("stream_decontaminate")
 
 
-def _band_hash_array(sig: str, bands: int, rows_per_band: int):
-    """Per-band combined LSH hashes of a signature column, as
-    array<long> — xxhash64(band_idx, comma-joined band slice). The
-    band index is MIXED IN (unlike batch ``_banded``, which carries it
-    as a separate join key) so a flat array element is equivalent to
-    the batch (band, bhash) pair."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            b.cast("long"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col(sig), b * rows_per_band + 1, rows_per_band),
-                    lambda v: v.cast("string"),
-                ),
-                ",",
-            ),
-        ),
-    )
-
-
 def stream_near_dedup(
     sdf: DataFrame,
     history: Any,
@@ -591,9 +571,9 @@ def stream_near_dedup(
     ``mode="filter"`` passes through only CLEAN stream rows (no
     verified near-dup in history). "Clean" is a per-doc ALL-bands
     decision, which a relational anti-join cannot express post-explode,
-    so the history index (combined band-hash -> signature rows) is
-    collected and BROADCAST, and an Arrow pandas UDF probes it per doc:
-    O(bands) dict lookups + signature verification against only
+    so the history index (one band-hash -> signature-rows dict per
+    band) is collected and BROADCAST, and an Arrow pandas UDF probes it
+    per doc: O(bands) dict lookups + signature verification against only
     colliding candidates. Bounded by ``max_history`` rows (default
     200k; ~100 MB broadcast at num_perm=64) — raise if your history
     outgrows it and use ``mode="matches"`` + a batch join-back instead
@@ -615,9 +595,10 @@ def stream_near_dedup(
     miss. Dropped-candidate accounting registers under op
     ``"stream_near_dedup"`` (see ``dropped_pairs_estimate``)."""
     from ..scale.dedup import (
-        _DROPPED_PAIRS, _banded, _cap_buckets, _minhash_sigs, _shingles,
+        _DROPPED_PAIRS, _cap_buckets, _minhash_sigs, _shingles,
         minhash_signature, word_shingles,
     )
+    from ..scale.lsh import minhash_band_hashes, minhash_banded
 
     if mode not in ("matches", "filter"):
         raise ValueError(
@@ -746,7 +727,7 @@ def stream_near_dedup(
                 analyzer, shingle_chars,
             )
             banded_hist_raw = _cap_buckets(
-                _banded(hist_sigs, "sig", bands, rows_per_band),
+                minhash_banded(hist_sigs, "sig", bands, rows_per_band),
                 ["band", "bhash"], max_bucket, op="stream_near_dedup",
             )
         hist_banded = register_internal_cache(
@@ -757,7 +738,7 @@ def stream_near_dedup(
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        banded = _banded(s, "__sig", bands, rows_per_band)
+        banded = minhash_banded(s, "__sig", bands, rows_per_band)
         est = F.size(
             F.filter(
                 F.zip_with(
@@ -808,7 +789,7 @@ def stream_near_dedup(
         )
     hist_rows = (
         hist_sigs.withColumn(
-            "__bh", _band_hash_array("sig", bands, rows_per_band)
+            "__bh", minhash_band_hashes(F.col("sig"), bands, rows_per_band)
         )
         .select("__bh", "sig")
         .limit(max_history + 1)
@@ -821,16 +802,17 @@ def stream_near_dedup(
             f"batch join-back for unbounded histories"
         )
     sigs_mat = np.array([list(r["sig"]) for r in hist_rows], dtype="int64")
-    buckets: dict[int, list[int]] = {}
+    # one dict per band: band hash -> history rows in that bucket
+    buckets: list[dict[int, list[int]]] = [{} for _ in range(bands)]
     for i, r in enumerate(hist_rows):
-        for bh in r["__bh"]:
-            buckets.setdefault(int(bh), []).append(i)
+        for band, bh in zip(buckets, r["__bh"]):
+            band.setdefault(int(bh), []).append(i)
     # the same skew cap the matches path applies to the history side:
     # an oversized boilerplate bucket leaves candidate generation (its
     # pair cost is what max_bucket bounds) — parity with minhash_join,
     # including the dropped-pair accounting the docstring promises
-    oversized = [bh for bh, members in buckets.items()
-                 if len(members) > max_bucket]
+    oversized = [(band, bh) for band in buckets
+                 for bh, members in band.items() if len(members) > max_bucket]
     if oversized:
         from ..scale.dedup import _register_dropped_pairs
 
@@ -838,15 +820,15 @@ def stream_near_dedup(
             "stream_near_dedup",
             sdf.sparkSession.createDataFrame(
                 [
-                    (float(len(buckets[bh]) * (len(buckets[bh]) - 1) / 2),)
-                    for bh in oversized
+                    (float(len(band[bh]) * (len(band[bh]) - 1) / 2),)
+                    for band, bh in oversized
                 ],
                 "dropped double",
             ),
             reset=False,
         )
-    for bh in oversized:
-        del buckets[bh]
+    for band, bh in oversized:
+        del band[bh]
     bcast = sdf.sparkSession.sparkContext.broadcast((buckets, sigs_mat))
     need = int(np.ceil(threshold * num_perm))
     out_cols = list(sdf.columns)
@@ -882,8 +864,8 @@ def stream_near_dedup(
                 cand: set[int] = set()
                 bh_i = bhs[i]
                 if bh_i is not None:
-                    for bh in bh_i:
-                        hit = bks.get(int(bh))
+                    for band, bh in zip(bks, bh_i):
+                        hit = band.get(int(bh))
                         if hit:
                             cand.update(hit)
                 if cand:
@@ -907,7 +889,9 @@ def stream_near_dedup(
 
     probed = s_all.withColumn(
         "__bh",
-        F.when(signable, _band_hash_array("__sig", bands, rows_per_band)),
+        F.when(
+            signable, minhash_band_hashes(F.col("__sig"), bands, rows_per_band)
+        ),
     )
     return probed.mapInPandas(_drop_dups, schema=out_schema)
 
@@ -1227,9 +1211,8 @@ __all__.append("stream_dedup_paragraphs")
 def _stream_fp_dedup(
     sdf: DataFrame,
     index_path: str,
-    fam,
-    hash_one,
-    op: str,
+    name: str,
+    fp_one,
     content: Any,
     id_col: Any,
     mode: str,
@@ -1240,10 +1223,11 @@ def _stream_fp_dedup(
     min_stamp: int | None = None,
 ) -> DataFrame:
     """Shared streaming consumer of the 64-bit-fingerprint index
-    family (scale/fp_index.py): stream_image_dedup and
-    stream_audio_dedup are this engine under their modality's hash
-    function. See those wrappers for the user-facing contract; the
-    scale notes live here once.
+    family (scale/fp_index.py): stream_image_dedup, stream_audio_dedup
+    and stream_video_dedup are this engine under the ``name`` family
+    and its per-row hasher ``fp_one(bytes) -> int`` — the same one the
+    batch fingerprint op uses. See those wrappers for the user-facing
+    contract; the scale notes live here once.
 
     ``mode="matches"`` (the 100 TB path): byte-identical fingerprints
     come from a stream-static equi-join on the 8-byte hash (hamming 0)
@@ -1258,11 +1242,17 @@ def _stream_fp_dedup(
     loud failure past the bound) and the same Arrow pass that hashes
     each row probes them with ``searchsorted``."""
     from ..scale.fp_index import (
+        FAMILIES,
         _prune_expired,
         _retention_cutoff,
-        band_cols,
         load_meta,
     )
+    from ..scale.lsh import fp_band_masks, fp_banded
+
+    fam, op = FAMILIES[name], f"stream_{name}_dedup"
+
+    def hash_one(b):
+        return None if b is None else fp_one(bytes(b))
 
     if mode not in ("matches", "filter"):
         raise ValueError(
@@ -1336,15 +1326,8 @@ def _stream_fp_dedup(
             ).select("band", "bval", F.col("id").alias("match_id"),
                      F.col(fp).alias("__mh__"))
             fuzzy = (
-                hashed.select(
-                    *in_cols, "__fp__",
-                    F.explode(
-                        F.array(*band_cols(F.col("__fp__"), meta["bands"]))
-                    ).alias("b"),
-                )
-                .select(*in_cols, "__fp__",
-                        F.col("b.band").alias("band"),
-                        F.col("b.bval").alias("bval"))
+                fp_banded(hashed, "__fp__", meta["bands"],
+                          [*in_cols, "__fp__"])
                 .join(postings, on=["band", "bval"])
                 .withColumn(
                     "hamming",
@@ -1398,18 +1381,10 @@ def _stream_fp_dedup(
     hashes_np = np.array(
         [r[fp] for r in rows], dtype=np.int64
     ).view(np.uint64)
-    shifts = [np.uint64((i * 64) // nb) for i in range(nb)]
-    masks = [
-        np.uint64(
-            (1 << (((i + 1) * 64) // nb - (i * 64) // nb)) - 1
-            if ((i + 1) * 64) // nb - (i * 64) // nb < 64
-            else 0xFFFFFFFFFFFFFFFF
-        )
-        for i in range(nb)
-    ]
+    band_masks = fp_band_masks(nb)
     band_tables = []
-    for i in range(nb):
-        bv = (hashes_np >> shifts[i]) & masks[i]
+    for shift, mask in band_masks:
+        bv = (hashes_np >> shift) & mask
         order = np.argsort(bv, kind="stable")
         band_tables.append((bv[order], hashes_np[order]))
 
@@ -1432,9 +1407,9 @@ def _stream_fp_dedup(
                 continue
             u = np.uint64(h & ((1 << 64) - 1))
             hit = False
-            for i in range(nb):
-                bvals, cands = band_tables[i]
-                v = (u >> shifts[i]) & masks[i]
+            for (shift, mask), (bvals, cands) in zip(band_masks,
+                                                     band_tables):
+                v = (u >> shift) & mask
                 lo_ix = np.searchsorted(bvals, v, side="left")
                 hi_ix = np.searchsorted(bvals, v, side="right")
                 if lo_ix == hi_ix:
@@ -1482,27 +1457,11 @@ def stream_image_dedup(
     contract). ``max_hamming`` may tighten the build-time budget,
     never widen it. Mechanics shared with the audio member — see
     :func:`_stream_fp_dedup`."""
-    from ..scale.codecs import decode_raster
-    from ..scale.image_index import _FAMILY
-    from ..scale.multimodal import _dhash64, _stub_raster
-
-    def _hash_one(b):
-        if b is None:
-            return None
-        bb = bytes(b)
-        gray = decode_raster(bb)
-        if gray is None:
-            if strict:
-                raise NotImplementedError(
-                    "stream_image_dedup(strict=True): pixel decode needs "
-                    "PNG/BMP/baseline-JPEG (other containers require a "
-                    "codec library)"
-                )
-            gray = _stub_raster(bb)
-        return _dhash64(gray)
+    from ..scale.multimodal import _image_fp_one
 
     return _stream_fp_dedup(
-        sdf, index_path, _FAMILY, _hash_one, "stream_image_dedup",
+        sdf, index_path, "image",
+        partial(_image_fp_one, strict=strict, op="stream_image_dedup"),
         content, id_col, mode, max_hamming, ts, watermark, max_history,
         min_stamp,
     )
@@ -1540,28 +1499,11 @@ def stream_audio_dedup(
     packed numpy band tables bounded by ``max_history`` and passes
     through only CLEAN rows; NULL content passes as clean. Mechanics
     shared via :func:`_stream_fp_dedup`."""
-    from ..scale.audio_index import _FAMILY
-    from ..scale.codecs import decode_pcm
-    from ..scale.multimodal import _afp64, _stub_audio_fp
-
-    def _hash_one(b):
-        if b is None:
-            return None
-        bb = bytes(b)
-        pcm = decode_pcm(bb)
-        h = None if pcm is None else _afp64(pcm[0], pcm[1])
-        if h is None:
-            if strict:
-                raise NotImplementedError(
-                    "stream_audio_dedup(strict=True): waveform decode "
-                    "needs raw-PCM WAV/AIFF >= 256 samples (compressed "
-                    "containers require a codec library)"
-                )
-            h = _stub_audio_fp(bb)
-        return h
+    from ..scale.multimodal import _audio_fp_one
 
     return _stream_fp_dedup(
-        sdf, index_path, _FAMILY, _hash_one, "stream_audio_dedup",
+        sdf, index_path, "audio",
+        partial(_audio_fp_one, strict=strict, op="stream_audio_dedup"),
         content, id_col, mode, max_hamming, ts, watermark, max_history,
         min_stamp,
     )
@@ -1601,17 +1543,11 @@ def stream_video_dedup(
     through only CLEAN rows; NULL content passes as clean. Mechanics
     shared via :func:`_stream_fp_dedup`."""
     from ..scale.multimodal import _video_fp_one
-    from ..scale.video_index import _FAMILY
-
-    def _hash_one(b):
-        if b is None:
-            return None
-        return _video_fp_one(
-            bytes(b), n_frames, strict, "stream_video_dedup"
-        )
 
     return _stream_fp_dedup(
-        sdf, index_path, _FAMILY, _hash_one, "stream_video_dedup",
+        sdf, index_path, "video",
+        partial(_video_fp_one, n_frames=n_frames, strict=strict,
+                op="stream_video_dedup"),
         content, id_col, mode, max_hamming, ts, watermark, max_history,
         min_stamp,
     )

@@ -1,5 +1,5 @@
 """Persistent audio-fingerprint index (r14): build / match / dedup /
-append / delete / compact lifecycle (scale/audio_index.py) — the audio
+append / delete / compact lifecycle (scale/fp_index.py) — the audio
 member of the incremental-dedup index family, instantiating the shared
 fp_index engine under the spectral fingerprint."""
 

@@ -1,5 +1,5 @@
 """Persistent image-fingerprint index (r13): build / match / dedup /
-append / compact lifecycle (scale/image_index.py) — the image member
+append / compact lifecycle (scale/fp_index.py) — the image member
 of the incremental-dedup index family."""
 
 from __future__ import annotations

@@ -145,3 +145,26 @@ def test_minhash_sigs_carry_columns(spark):
     }
     assert set(got) == {0, 2}  # NULL text drops, as in the explode form
     assert got[0][1] == 10 and got[2][1] == 30
+
+
+def test_signature_rejected_inside_aggregate_and_join(spark):
+    """The documented contract: a nondeterministic pandas-UDF column,
+    legal in Project/Filter, rejected by the analyzer as an aggregate
+    argument or in a join condition (no Spark job runs)."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    df = spark.createDataFrame(TEXTS[:2], "doc_id long, text string")
+
+    def sig(c):
+        return minhash_signature(word_shingles(F.col(c), 2), 8)
+
+    assert df.select(sig("text").alias("s")).filter(
+        F.element_at("s", 1).isNotNull()
+    ).columns == ["s"]
+    with pytest.raises(AnalysisException, match="NONDETERMINISTIC"):
+        df.groupBy().agg(F.max(F.element_at(sig("text"), 1)))
+    a, b = df.alias("a"), df.alias("b")
+    with pytest.raises(AnalysisException, match="NON_DETERMINISTIC"):
+        a.join(b, F.element_at(sig("a.text"), 1)
+               == F.element_at(sig("b.text"), 1))

@@ -52,3 +52,50 @@ def test_reliable_when_dir_configured(spark):
         # setter's mangled name needs getattr
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(_scala_none(sc))
         assert sc.getCheckpointDir() is None
+
+
+class _FakeContext:
+    """Stands in for a SparkContext with a checkpoint dir, so the
+    warning path runs without configuring one on the shared session."""
+
+    def __init__(self, clean):
+        self.conf = {}
+        if clean is not None:
+            self.conf["spark.cleaner.referenceTracking.cleanCheckpoints"] = clean
+
+    def getCheckpointDir(self):
+        return "file:/ckpt"
+
+    def getConf(self):
+        return self.conf
+
+
+class _FakeFrame:
+    def __init__(self, sc):
+        self.sparkSession = type("S", (), {"sparkContext": sc})()
+
+    def checkpoint(self, eager):
+        return ("checkpoint", eager)
+
+    def localCheckpoint(self, eager):
+        return ("localCheckpoint", eager)
+
+
+def test_warns_once_per_context_when_checkpoints_are_not_cleaned(caplog):
+    import logging
+
+    caplog.set_level(logging.WARNING, logger="datar_polars_spark.plans.cache")
+
+    def warnings():
+        return [r for r in caplog.records if "cleanCheckpoints" in r.getMessage()]
+
+    sc = _FakeContext(clean=None)
+    assert reliable_checkpoint(_FakeFrame(sc), eager=False) == ("checkpoint", False)
+    reliable_checkpoint(_FakeFrame(sc))
+    assert len(warnings()) == 1
+    assert "file:/ckpt" in warnings()[0].getMessage()
+    # a second context warns again; one that cleans its checkpoints never
+    reliable_checkpoint(_FakeFrame(_FakeContext(clean="false")))
+    assert len(warnings()) == 2
+    reliable_checkpoint(_FakeFrame(_FakeContext(clean="true")))
+    assert len(warnings()) == 2

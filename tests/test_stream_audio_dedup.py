@@ -1,6 +1,6 @@
 """Streaming perceptual audio dedup vs the persistent audio index:
 matches/filter modes agree with the batch index ops on identical data
-(scale/audio_index.py <-> streaming.stream_audio_dedup) — the audio
+(scale/fp_index.py <-> streaming.stream_audio_dedup) — the audio
 member of the shared _stream_fp_dedup engine."""
 
 from __future__ import annotations

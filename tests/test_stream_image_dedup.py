@@ -1,6 +1,6 @@
 """Streaming perceptual image dedup vs the persistent image index:
 matches/filter modes agree with the batch index ops on identical data
-(scale/image_index.py <-> streaming.stream_image_dedup)."""
+(scale/fp_index.py <-> streaming.stream_image_dedup)."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
 """Streaming perceptual video dedup vs the persistent video index:
 matches/filter modes agree with the batch index ops on identical data
-(scale/video_index.py <-> streaming.stream_video_dedup) — the video
+(scale/fp_index.py <-> streaming.stream_video_dedup) — the video
 member of the shared _stream_fp_dedup engine."""
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Persistent video-fingerprint index (r14): build / match / dedup /
-append / delete / compact lifecycle (scale/video_index.py) — the video
+append / delete / compact lifecycle (scale/fp_index.py) — the video
 member of the incremental-dedup index family, instantiating the shared
 fp_index engine under the temporal-median fingerprint."""
 
