@@ -495,17 +495,13 @@ def _minhash_sigs(df: DataFrame, tname: str, idn: str, num_perm: int,
     ).filter(F.col("__sig")[0].isNotNull())
     if unique_ids:
         return rows.select("id", F.col("__sig").alias("sig"), *carry)
-    mins = [
-        F.min(F.col("__sig")[i]).alias(f"__h{i}") for i in range(num_perm)
-    ]
-    return (
-        rows.groupBy("id")
-        .agg(*mins, *[F.first(c).alias(c) for c in carry])
-        .select(
-            "id",
-            F.array(*[F.col(f"__h{i}") for i in range(num_perm)]).alias("sig"),
-            *carry,
-        )
+    # the elementwise-min fold as ONE Column: num_perm F.min/getItem
+    # calls cost ~10-15 Py4J round trips each at plan build
+    fold = F.expr(
+        "array(" + ", ".join(f"min(__sig[{i}])" for i in range(num_perm)) + ")"
+    )
+    return rows.groupBy("id").agg(
+        fold.alias("sig"), *[F.first(c).alias(c) for c in carry]
     )
 
 

@@ -480,12 +480,21 @@ def match_against_index(
     Batch rows with NULL ids are exempt (never matched, never
     dropped); an exactly-matching batch doc appears only in the
     'exact' rows (it is excluded from fuzzy candidate generation)."""
+    td = ensure_tibble(batch)
+    return _match(
+        td, path, _load_meta(td.df.sparkSession, path), text, id_col,
+        threshold=threshold, max_bucket=max_bucket, verify=verify,
+        log_dropped=log_dropped, min_stamp=min_stamp,
+    )
+
+
+def _match(td: Tibble, path: str, meta: dict, text, id_col, *,
+           threshold, max_bucket, verify, log_dropped, min_stamp) -> Tibble:
+    """match_against_index over an already loaded sidecar."""
     if verify not in ("estimate", "exact"):
         raise ValueError(f"verify must be 'estimate' or 'exact', got {verify!r}")
     _DROPPED_PAIRS["match_against_index"] = []
-    td = ensure_tibble(batch)
     spark = td.df.sparkSession
-    meta = _load_meta(spark, path)
     from .fp_index import _prune_expired, retention_cutoff
 
     # retention cutoff (caller min_stamp or the sidecar watermark):
@@ -721,12 +730,12 @@ def dedup_against_index(
     (future exact dups of them are caught) but no MinHash postings —
     no identity to post under (family contract, same as build)."""
     td = ensure_tibble(batch)
-    hits = match_against_index(
-        td, path, text, id_col,
+    meta = _load_meta(td.df.sparkSession, path)
+    hits = _match(
+        td, path, meta, text, id_col,
         threshold=threshold, max_bucket=max_bucket,
         verify=verify, log_dropped=log_dropped, min_stamp=min_stamp,
     )
-    meta = _load_meta(td.df.sparkSession, path)
     idn = _name_of(id_col) if id_col is not None else meta["id_col"]
     surv = td.df.select(*td.columns).join(
         hits.df.select(F.col("id_a").alias(idn)).dropDuplicates(),

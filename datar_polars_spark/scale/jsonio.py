@@ -2,12 +2,13 @@
 
 Model-sized artifacts (IVF-PQ indexes, BPE merge tables) need to live
 NEXT TO the data they describe — on whatever filesystem the lake uses.
-Writing goes through ``FileSystem.create`` via py4j so the same call
-works on file://, hdfs://, s3a://, ...; reading uses Spark's wholetext
-reader (one tiny file, no driver-side FS client needed).
+Writing goes through ``FileSystem.create`` and reading through
+``FileSystem.open``, via py4j, so the same calls work on file://,
+hdfs://, s3a://, ... — driver-side, with no Spark job.
 
-File names must not start with ``_`` or ``.``: Spark's input path
-filter hides such files from readers (the ``_SUCCESS`` convention).
+Artifact names avoid a leading ``_`` or ``.``: Spark's input path
+filter hides such files from any Spark reader of the directory (the
+``_SUCCESS`` convention).
 """
 
 from __future__ import annotations
@@ -56,9 +57,16 @@ def replace_dir(spark, tmp: str, dest: str) -> None:
 def read_json_file(spark, path: str) -> Any:
     """Read one JSON file written by :func:`write_json_file` (or any
     single-file JSON document) from any Hadoop-supported filesystem."""
-    rows = (
-        spark.read.option("wholetext", "true").text(path).collect()
-    )
-    if not rows:
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    stream = fs.open(jpath)
+    try:
+        data = sc._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(
+            stream
+        )
+    finally:
+        stream.close()
+    if not data:
         raise ValueError(f"{path}: empty or unreadable JSON artifact")
-    return json.loads(rows[0][0])
+    return json.loads(data)

@@ -34,6 +34,7 @@ deployment retrains on a larger labeled sample with the same call.
 
 from __future__ import annotations
 
+import json
 import math
 import zlib
 from typing import Any
@@ -230,9 +231,24 @@ _PAD = "\x02"  # word-boundary padding marker in the gram space
 
 
 def seed_corpus(spark) -> Tibble:
-    """The built-in labeled seed corpus as a (text, lang) Tibble."""
-    rows = [(t, lang) for lang, ts in _SEED.items() for t in ts]
-    return Tibble(spark.createDataFrame(rows, "text string, lang string"))
+    """The built-in labeled seed corpus as a (text, lang) Tibble.
+
+    Built in the JVM from one JSON literal: ``createDataFrame`` over a
+    list makes a Python RDD, whose scan starts a second Python worker
+    pool next to the Arrow-UDF one."""
+    rows = [
+        {"text": t, "lang": lang} for lang, ts in _SEED.items() for t in ts
+    ]
+    return Tibble(
+        spark.range(1, numPartitions=1).select(
+            F.inline(
+                F.from_json(
+                    F.lit(json.dumps(rows)),
+                    "array<struct<text:string,lang:string>>",
+                )
+            )
+        )
+    )
 
 
 def _grams_expr(col: Column, n_lo: int, n_hi: int) -> Column:

@@ -5,10 +5,20 @@ the native columnar format for the 100 TB target — plus JSON/ORC).
 Each reader returns a :class:`Tibble` with the hidden row-order column
 assigned at ingest (monotonically_increasing_id over the scan — narrow,
 order = file order).
+
+Opening a parquet path runs no Spark job: ``read_parquet`` takes the
+schema from one driver-side footer read of the file Spark's own
+inference would read (``_open_parquet``), and the same footer answers
+the TIMESTAMP(NANOS) check. Repeated reads of an unchanged path reuse
+the first read's lazy plan (``_READ_MEMO``).
 """
 
 from __future__ import annotations
 
+import re
+
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 from ..tibble import Tibble
@@ -44,12 +54,11 @@ def _restore_levels(df) -> Tibble:
     return out
 
 
-# r14: session-scoped lazy-PLAN memo for repeated reads of the same
-# path — every spark.read.parquet(path) call re-lists the directory
-# and re-infers the schema from footers JVM-side (path-based reads sit
-# outside Spark's catalog file-index cache), measured ~70-100 ms per
-# read and the single biggest Py4J site in a headline plan build. The
-# memo returns the SAME lazy DataFrame (plan) when the path's file set
+# Session-scoped lazy-PLAN memo for repeated reads of the same path.
+# A miss lists the path twice and reads one footer on the driver (see
+# ``_open_parquet``): no Spark job, but two data-source resolutions and
+# a few dozen Py4J round trips per plan build. The memo
+# returns the SAME lazy DataFrame (plan) when the path's file set
 # (name, mtime, size) is unchanged; no rows or results are cached —
 # every action still computes from the parquet files, and a rewritten
 # or appended path changes the signature and misses. Keyed on the
@@ -65,8 +74,8 @@ def _parquet_sig(path: str):
     non-Spark writer dropping a file into ``k=1/`` without touching
     ``_SUCCESS`` served a stale plan. Walking every data file (relpath,
     mtime_ns, size) catches appends, rewrites and deletes at any depth;
-    the walk is driver-side microseconds against the 70-100 ms JVM
-    re-list a memo hit saves."""
+    the walk is driver-side microseconds against the JVM re-list and
+    footer read a memo hit saves."""
     import os
 
     try:
@@ -94,8 +103,9 @@ def read_parquet(spark: SparkSession, path: str) -> Tibble:
     precision): those are read as nano longs and converted to
     microsecond timestamps JVM-side — still a distributed scan. Factor
     levels persisted by write_parquet are restored from column
-    metadata. Re-reading an unchanged path reuses the first read's
-    lazy plan (see ``_READ_MEMO``)."""
+    metadata. Opening the path runs no Spark job (see
+    ``_open_parquet``); re-reading an unchanged path reuses the first
+    read's lazy plan (see ``_READ_MEMO``)."""
     sig = _parquet_sig(path)
     key = None
     if sig is not None:
@@ -107,14 +117,10 @@ def read_parquet(spark: SparkSession, path: str) -> Tibble:
             hit = _READ_MEMO.get(key)
             if hit is not None:
                 return _restore_levels(hit)
-    ns_cols = _nanos_timestamp_cols(path)
-    if not ns_cols:
-        df = spark.read.parquet(path)
-    else:
+    df, ns_cols = _open_parquet(spark, path)
+    if ns_cols:
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
         for c in ns_cols:
             df = df.withColumn(
                 c, F.timestamp_micros((F.col(c) / 1000).cast("long"))
@@ -126,39 +132,113 @@ def read_parquet(spark: SparkSession, path: str) -> Tibble:
     return _restore_levels(df)
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Driver-side footer peek: which top-level columns are genuine
-    TIMESTAMP(NANOS) (INT64 + nanos logical annotation)? Checked
-    against the PARQUET schema, not the arrow view: pyarrow reports
-    legacy INT96 timestamps (Spark's own default output type) as
-    timestamp[ns] too, but Spark reads INT96 natively as TIMESTAMP —
-    flagging those would make the reader divide a TIMESTAMP by 1000."""
+# what opening a path can raise: Py4J, converted JVM and IO errors
+_OPEN_ERRORS = (Py4JError, PySparkException, OSError)
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+# a top-level INT64 TIMESTAMP(NANOS) field in parquet's MessageType
+# text (two-space indent = top level; `= n` is an optional field id)
+_NANOS_FIELD = re.compile(
+    r"^  (?:required|optional) int64 (.+) "
+    r"\(TIMESTAMP\(NANOS,(?:true|false)\)\)(?: = \d+)?;$",
+    re.M,
+)
+
+
+def _open_parquet(spark: SparkSession, path: str):
+    """Open a parquet path as ``(DataFrame, nanos_cols)`` without a
+    Spark job.
+
+    ``spark.read.parquet(path)`` infers the schema with a one-task job
+    (``ParquetFileFormat.mergeSchemasInParallel``) that reads a single
+    footer. This does the same read on the driver with Spark's own
+    code: list the path through Spark's file index (a probe read with
+    an empty user schema — no inference), pick the file
+    ``ParquetUtils.inferSchema`` would read, read its footer with
+    ``ParquetFileFormat.readParquetFootersInParallel`` and convert it
+    with ``ParquetFileFormat.readSchema`` (the session-conf converter;
+    the Spark row-metadata key wins, so ``datar_levels`` field metadata
+    survives), then open the path with that schema. The listing runs
+    twice; above ``spark.sql.sources.parallelPartitionDiscovery.
+    threshold`` paths each listing is itself a job, as in Spark's read.
+
+    ``nanos_cols`` are the footer's top-level INT64 TIMESTAMP(NANOS)
+    columns, which Spark's reader rejects: they come back as nano longs
+    (``spark.sql.legacy.parquet.nanosAsLong`` is set for the session)
+    and the caller converts them. Checking the footer Spark reads —
+    not a glob of top-level files — covers partitioned directories.
+
+    Falls back to Spark's inferring read when the path holds summary
+    files (``_metadata``/``_common_metadata``) or no data file, and on
+    any Py4J or IO error — a missing path then raises Spark's own
+    exception; after the nanos check, also when the ``mergeSchema``
+    conf is on or a data column shares a partition column's name."""
     try:
-        import glob
-        import os
+        opened = _open_from_footer(spark, path)
+    except _OPEN_ERRORS:
+        opened = None
+    if opened is None:
+        return spark.read.parquet(path), []
+    return opened
 
-        import pyarrow.parquet as pq
 
-        target = path
-        if os.path.isdir(path):
-            files = glob.glob(os.path.join(path, "*.parquet"))
-            if not files:
-                return []
-            target = files[0]
-        ps = pq.ParquetFile(target).schema
-        out = []
-        for i in range(len(ps)):
-            col = ps.column(i)
-            if "." in col.path:  # nested — the reader only fixes top-level
-                continue
-            if col.physical_type != "INT64":
-                continue
-            lt = str(col.logical_type).lower()
-            if "timestamp" in lt and "nano" in lt:
-                out.append(col.name)
-        return out
-    except Exception:
-        return []
+def _open_from_footer(spark: SparkSession, path: str):
+    from urllib.parse import unquote
+
+    from py4j.java_gateway import JavaClass
+    from pyspark.sql import DataFrame
+
+    # classes by full name: each segment of a jvm.org.apache... lookup
+    # is a Py4J round trip
+    client = spark.sparkContext._gateway._gateway_client
+    jspark = spark._jsparkSession
+    empty = JavaClass("org.apache.spark.sql.types.StructType", client)()
+    probe = jspark.read().schema(empty).format("parquet").load(path)
+    index = probe.logicalPlan().relation().location()
+    # inputFiles are URI strings: a newline inside a name is %0A-quoted
+    listed = JavaClass("org.apache.hadoop.util.StringUtils", client).join(
+        "\n", index.inputFiles()
+    )
+    names = listed.split("\n") if listed else []
+    if not names or any(
+        n.rsplit("/", 1)[-1] in _SUMMARY_FILES for n in names
+    ):
+        return None
+    # inferSchema reads the first data file ordered by Path.toString:
+    # the decoded URI, compared by UTF-16 code units as Java does
+    first = min(
+        range(len(names)),
+        key=lambda i: unquote(names[i]).encode("utf-16-be"),
+    )
+    pff = getattr(
+        JavaClass(
+            "org.apache.spark.sql.execution.datasources.parquet."
+            "ParquetFileFormat$",
+            client,
+        ),
+        "MODULE$",
+    )
+    footers = pff.readParquetFootersInParallel(
+        jspark.sessionState().newHadoopConf(),
+        index.allFiles().slice(first, first + 1),
+        False,
+    )
+    message = (
+        footers.head().getParquetMetadata().getFileMetaData().getSchema()
+    )
+    ns_cols = _NANOS_FIELD.findall(message.toString())
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
+        return spark.read.parquet(path), ns_cols
+    schema = pff.readSchema(footers, jspark).get()
+    df = DataFrame(
+        jspark.read().schema(schema).format("parquet").load(path), spark
+    )
+    # a user schema moves a data column named like a partition column
+    # to the end; inference keeps it in place
+    if len(df.schema) != schema.length() + probe.schema().length():
+        return spark.read.parquet(path), ns_cols
+    return df, ns_cols
 
 
 def read_csv(

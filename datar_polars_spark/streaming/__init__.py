@@ -59,19 +59,25 @@ def stream_read_parquet(
     spark: SparkSession, path: str, schema: Any = None
 ) -> DataFrame:
     """File-stream source. Streaming needs an explicit schema; when not
-    given, infer it from the files already present (one driver-side
-    batch-read of footers only). TIMESTAMP(NANOS) columns — which
-    Spark's parquet reader rejects — are read as nano longs and
-    converted to microsecond timestamps, same as the batch reader."""
-    from ..sources import _nanos_timestamp_cols
+    given, take it from the files already present — the batch reader's
+    driver-side footer read (``sources._open_parquet``), no Spark job.
+    TIMESTAMP(NANOS) columns — which Spark's parquet reader rejects —
+    are read as nano longs and converted to microsecond timestamps,
+    same as the batch reader."""
+    from ..sources import _OPEN_ERRORS, _open_parquet
 
     import os
 
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    try:
+        present, ns_cols = _open_parquet(spark, path)
+    except _OPEN_ERRORS:
+        # an explicit schema may name a directory that has no files yet
+        if schema is None:
+            raise
+        ns_cols = []
+    else:
+        if schema is None:
+            schema = present.schema
     reader = spark.readStream.schema(schema)
     if os.path.isfile(path):
         # file-stream sources monitor directories; a single-file path

@@ -115,6 +115,20 @@ def test_train_deterministic(spark):
     assert m1 == m2
 
 
+def test_seed_corpus_is_built_in_the_jvm(spark, model):
+    """No Python RDD behind the seed corpus (its scan would start a
+    second Python worker pool), and the same rows and model as the
+    createDataFrame corpus it replaced."""
+    corpus = seed_corpus(spark)
+    plan = corpus.df._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan and "ExternalRDD" not in plan
+    rows = [(t, lang) for lang, ts in _SEED.items() for t in ts]
+    legacy = spark.createDataFrame(rows, "text string, lang string")
+    assert corpus.df.schema == legacy.schema
+    assert [tuple(r) for r in corpus.df.collect()] == rows
+    assert lang_id_train(ensure_tibble(legacy), "text", "lang") == model
+
+
 def test_top_k_caps_feature_count(spark):
     m = lang_id_train_seed(spark, top_k=50)
     for lang, w in m["weights"].items():

@@ -306,13 +306,13 @@ def test_streaming_token_budget_pipeline(spark, tmp_path):
 def test_nanos_detection_ignores_int96(spark, tmp_path):
     """r9 regression: pyarrow reports Spark's legacy INT96 timestamps
     as timestamp[ns], but Spark reads INT96 natively as TIMESTAMP —
-    the footer peek must flag only genuine INT64 TIMESTAMP(NANOS), or
+    the footer check must flag only genuine INT64 TIMESTAMP(NANOS), or
     the reader divides a TIMESTAMP column by 1000."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from datar_polars_spark.sources import _nanos_timestamp_cols
+    from datar_polars_spark.sources import _open_parquet
     from datar_polars_spark.streaming import stream_read_parquet, run_to_memory
 
     # genuine nanos file (pyarrow INT64 + nanos annotation)
@@ -324,16 +324,27 @@ def test_nanos_detection_ignores_int96(spark, tmp_path):
         ),
     })
     pq.write_table(tbl, ns_path, store_schema=False)
-    assert _nanos_timestamp_cols(ns_path) == ["ts"]
+    assert _open_parquet(spark, ns_path)[1] == ["ts"]
 
     # Spark-written file (INT96 by default): NOT nanos, reads natively
     sp_dir = str(tmp_path / "spark_ts")
     spark.createDataFrame(
         [(1,)], "x int"
     ).selectExpr("x", "timestamp'2026-01-01 00:00:00' as ts").write.parquet(sp_dir)
-    assert _nanos_timestamp_cols(sp_dir) == []
+    assert _open_parquet(spark, sp_dir)[1] == []
     got = run_to_memory(stream_read_parquet(spark, sp_dir), mode="append")
     assert str(got["ts"].iloc[0]) == "2026-01-01 00:00:00"
+
+
+def test_explicit_schema_on_dir_without_files(spark, tmp_path):
+    """A file-stream source may start before its first file lands:
+    with an explicit schema there is nothing to open, and no error."""
+    from datar_polars_spark.streaming import stream_read_parquet
+
+    empty = tmp_path / "incoming"
+    empty.mkdir()
+    sdf = stream_read_parquet(spark, str(empty), schema="x long, s string")
+    assert sdf.isStreaming and sdf.columns == ["x", "s"]
 
 
 def test_streaming_text_extraction_pipeline(spark, tmp_path):
