@@ -15,10 +15,10 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from ..plans.cache import context_memo
 from .registry import register
 
 try:  # optional dependency — container may not ship scipy
@@ -69,72 +69,64 @@ def bessel_scalar_fn(kind: str, nu: float, expon_scaled: bool = False):
     return None
 
 
-def _vec_udf(fn):
-    """Arrow-batched pandas UDF applying a float->float python fn."""
-
-    @F.pandas_udf(DoubleType())
-    def udf(s: pd.Series) -> pd.Series:
-        def safe(v):
-            if v is None or (isinstance(v, float) and math.isnan(v)):
-                return None
-            try:
-                return float(fn(float(v)))
-            except (ValueError, OverflowError):
-                return float("nan")
-
-        return s.map(safe)
-
-    return udf
-
-
-_GAMMA = _vec_udf(math.gamma)
-_LGAMMA = _vec_udf(math.lgamma)
+def _math_udf(name: str):
+    """The active SparkContext's UDF over ``math.<name>``: one object
+    per context, since a pandas UDF binds its JVM function to the
+    context of its first use."""
+    return context_memo("math_udf", 8).get_or_make(
+        name, lambda: _lazy_vec_udf(getattr, math, name)
+    )
 
 
 @register("gamma")
 def _gamma(ctx, x):
-    return _GAMMA(ctx.col(x))
+    return _math_udf("gamma")(ctx.col(x))
 
 
 @register("lgamma")
 def _lgamma(ctx, x):
-    return _LGAMMA(ctx.col(x))
+    return _math_udf("lgamma")(ctx.col(x))
 
 
 @register("lfactorial")
 def _lfactorial(ctx, x):
-    return _LGAMMA(ctx.col(x) + 1)
+    return _math_udf("lgamma")(ctx.col(x) + 1)
 
 
 @register("beta")
 def _beta(ctx, a, b):
+    lg = _math_udf("lgamma")
     ca, cb = ctx.col(a), ctx.col(b)
-    return F.exp(_LGAMMA(ca) + _LGAMMA(cb) - _LGAMMA(ca + cb))
+    return F.exp(lg(ca) + lg(cb) - lg(ca + cb))
 
 
 @register("lbeta")
 def _lbeta(ctx, a, b):
+    lg = _math_udf("lgamma")
     ca, cb = ctx.col(a), ctx.col(b)
-    return _LGAMMA(ca) + _LGAMMA(cb) - _LGAMMA(ca + cb)
+    return lg(ca) + lg(cb) - lg(ca + cb)
 
 
 @register("choose")
 def _choose(ctx, n, k):
+    lg = _math_udf("lgamma")
     cn, ck = ctx.col(n), ctx.col(k)
-    return F.round(F.exp(_LGAMMA(cn + 1) - _LGAMMA(ck + 1) - _LGAMMA(cn - ck + 1)))
+    return F.round(F.exp(lg(cn + 1) - lg(ck + 1) - lg(cn - ck + 1)))
 
 
 @register("lchoose")
 def _lchoose(ctx, n, k):
+    lg = _math_udf("lgamma")
     cn, ck = ctx.col(n), ctx.col(k)
-    return _LGAMMA(cn + 1) - _LGAMMA(ck + 1) - _LGAMMA(cn - ck + 1)
+    return lg(cn + 1) - lg(ck + 1) - lg(cn - ck + 1)
 
 
 def _lazy_vec_udf(maker, *margs):
-    """Arrow UDF that builds its scalar fn on the EXECUTOR (first
-    batch): the mpmath backend's closures capture gmpy2 objects that
-    don't survive cloudpickle, so only the module-level maker (pickled
-    by reference) and plain scalar args cross the wire."""
+    """Arrow-batched pandas UDF applying the float->float fn
+    ``maker(*margs)``, built on the EXECUTOR (first batch): the mpmath
+    backend's closures capture gmpy2 objects that don't survive
+    cloudpickle, so only the module-level maker (pickled by reference)
+    and plain scalar args cross the wire."""
 
     @F.pandas_udf(DoubleType())
     def udf(s: pd.Series) -> pd.Series:

@@ -1,4 +1,14 @@
-"""Bounded registry for INTERNAL persisted frames.
+"""Driver-side state of the current SparkContext, and the bounded
+registry for INTERNAL persisted frames.
+
+Every driver-side memo and op record (the read-plan memo, the
+footer-bound memos, per-context UDF and broadcast memos, the
+dropped-pairs and pagerank records, the internal-cache registry and
+the checkpoint warning) lives in one namespace held here for ONE
+SparkContext. PySpark allows one active SparkContext per process, so
+the policy is: a lookup from a different context object replaces the
+held namespace, and a stopped context's state is never served to a
+live one. Memos inside the namespace are :class:`Memo` — bounded FIFO.
 
 Several operators persist an intermediate frame because it feeds
 multiple consumers inside one returned plan (minhash/simhash/embedding
@@ -8,7 +18,7 @@ with a per-compilation seed). Those persists used to live until session
 end — a long pipeline with many such steps accumulated cached data
 indefinitely.
 
-This registry caps the number of simultaneously-cached internal frames
+The registry caps the number of simultaneously-cached internal frames
 (``DATAR_MAX_INTERNAL_CACHES``, default 8): registering a new frame
 evicts (unpersists) the oldest *recompute-safe* entries beyond the cap,
 FIFO. Eviction is safe for deterministic frames — Spark transparently
@@ -26,10 +36,11 @@ user asked for are the user's to manage.
 from __future__ import annotations
 
 import os
-import weakref
 from collections import OrderedDict
-from itertools import count
-from typing import TYPE_CHECKING
+from contextlib import suppress
+from typing import TYPE_CHECKING, Any, Callable
+
+from pyspark import SparkContext
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -38,14 +49,71 @@ __all__ = ["register_internal_cache", "unregister_internal_cache",
            "release_internal_caches", "internal_cache_count",
            "reliable_checkpoint"]
 
-_seq = count()
-# token -> (df, safe_to_evict); insertion-ordered for FIFO eviction
-_caches: "OrderedDict[int, tuple[DataFrame, bool]]" = OrderedDict()
+# the one module-level holder: [context, its state namespace]
+_HELD: list = [None, {}]
 
-_CLEAN_CHECKPOINTS = "spark.cleaner.referenceTracking.cleanCheckpoints"
-# SparkContexts already warned about uncleaned checkpoints; weak, so an
-# entry goes away with its context
-_warned_checkpoint_contexts: "weakref.WeakSet" = weakref.WeakSet()
+
+def context_state(sc: Any = None) -> dict:
+    """The state namespace of ``sc`` (default: the active SparkContext).
+    A different context object than the held one replaces the held
+    namespace, so nothing recorded under a stopped context survives."""
+    if sc is None:
+        sc = SparkContext._active_spark_context
+    if _HELD[0] is not sc:
+        _HELD[:] = [sc, {}]
+    return _HELD[1]
+
+
+class Memo(dict):
+    """FIFO memo: storing a new key when ``size`` entries are held drops
+    the oldest first (``on_evict`` receives its value); ``size=None``
+    leaves it unbounded."""
+
+    def __init__(self, size: int | None = None,
+                 on_evict: Callable | None = None):
+        super().__init__()
+        self.size = size
+        self.on_evict = on_evict
+
+    def put(self, key, value):
+        if key not in self and self.size is not None and len(self) >= self.size:
+            old = self.pop(next(iter(self)))
+            if self.on_evict is not None:
+                self.on_evict(old)
+        self[key] = value
+        return value
+
+    def get_or_make(self, key, make: Callable):
+        """The value under ``key``, storing ``make()`` on a miss."""
+        return self[key] if key in self else self.put(key, make())
+
+
+def context_memo(name: str, size: int, sc: Any = None,
+                 on_evict: Callable | None = None) -> Memo:
+    """The context's memo called ``name``, created on first use."""
+    return context_state(sc).setdefault(name, Memo(size, on_evict))
+
+
+def file_set_signature(files) -> int | None:
+    """Hash of the sorted ``(name, mtime_ns, size)`` of local files: a
+    rewrite, append or delete changes it, and a memo key stays one int
+    however many files a table has. None when a name is not a local
+    path or cannot be stat'ed."""
+    try:
+        stats = [(name, os.stat(name)) for name in files]
+    except (OSError, TypeError):
+        return None
+    return hash(tuple(sorted((n, s.st_mtime_ns, s.st_size) for n, s in stats)))
+
+
+def _caches() -> "OrderedDict[object, tuple[DataFrame, bool]]":
+    # token -> (df, safe_to_evict); insertion-ordered for FIFO eviction
+    return context_state().setdefault("internal_caches", OrderedDict())
+
+
+def _unpersist(df: "DataFrame") -> None:
+    with suppress(Exception):  # session already stopped
+        df.unpersist()
 
 
 def _max_caches() -> int:
@@ -63,23 +131,12 @@ def register_internal_cache(df: "DataFrame", safe_to_evict: bool = True) -> "Dat
     frame — including the one being registered — and silently reinstate
     the unbounded-recompute behavior the persists exist to prevent).
     The frame being registered is never evicted by its own call."""
-    token = next(_seq)
-    _caches[token] = (df, safe_to_evict)
-    n_over = sum(1 for _df, safe in _caches.values() if safe) - _max_caches()
-    if n_over > 0:
-        for tok in list(_caches):
-            if n_over <= 0:
-                break
-            if tok == token:
-                continue
-            cached, safe = _caches[tok]
-            if safe:
-                del _caches[tok]
-                try:
-                    cached.unpersist()
-                except Exception:
-                    pass  # session already stopped
-                n_over -= 1
+    caches = _caches()
+    token = object()
+    caches[token] = (df, safe_to_evict)
+    older = [t for t, (_df, safe) in caches.items() if safe and t is not token]
+    for tok in older[:max(0, len(older) + safe_to_evict - _max_caches())]:
+        _unpersist(caches.pop(tok)[0])
     return df
 
 
@@ -91,37 +148,37 @@ def unregister_internal_cache(df: "DataFrame") -> bool:
     slot (and the memory) immediately instead of leaking a pinned
     frame until session teardown or waiting on FIFO eviction. Returns
     True if an entry was found."""
-    found = False
-    for tok in [t for t, (c, _s) in _caches.items() if c is df]:
-        del _caches[tok]
-        found = True
-    try:
-        df.unpersist()
-    except Exception:
-        pass  # session already stopped
-    return found
+    caches = _caches()
+    found = [t for t, (c, _s) in caches.items() if c is df]
+    for tok in found:
+        del caches[tok]
+    _unpersist(df)
+    return bool(found)
 
 
 def release_internal_caches() -> int:
-    """Unpersist EVERY registered internal frame (including
-    non-evictable positional-id frames) and empty the registry.
-    Returns the number released. Safe to call at any stage boundary
-    where no earlier frame will be re-collected — derived results
-    recompute if needed (positional ids are only nondeterministic
-    across recomputes when the same cached frame must serve two passes
-    of one not-yet-collected plan, not after its plan has collected)."""
-    n = len(_caches)
-    for df, _safe in _caches.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _caches.clear()
+    """Unpersist EVERY internal frame registered under the active
+    SparkContext (including non-evictable positional-id frames) and
+    empty the registry. Returns the number released. Safe to call at
+    any stage boundary where no earlier frame will be re-collected —
+    derived results recompute if needed (positional ids are only
+    nondeterministic across recomputes when the same cached frame must
+    serve two passes of one not-yet-collected plan, not after its plan
+    has collected)."""
+    caches = _caches()
+    n = len(caches)
+    for df, _safe in caches.values():
+        _unpersist(df)
+    caches.clear()
     return n
 
 
 def internal_cache_count() -> int:
-    return len(_caches)
+    """Internal frames registered under the active SparkContext."""
+    return len(_caches())
+
+
+_CLEAN_CHECKPOINTS = "spark.cleaner.referenceTracking.cleanCheckpoints"
 
 
 def reliable_checkpoint(df: "DataFrame", eager: bool = True) -> "DataFrame":
@@ -153,8 +210,9 @@ def reliable_checkpoint(df: "DataFrame", eager: bool = True) -> "DataFrame":
         ckpt_dir = None
     if ckpt_dir is None:
         return df.localCheckpoint(eager=eager)
-    if sc not in _warned_checkpoint_contexts:
-        _warned_checkpoint_contexts.add(sc)
+    state = context_state(sc)
+    if not state.get("checkpoint_warned"):
+        state["checkpoint_warned"] = True
         clean = sc.getConf().get(_CLEAN_CHECKPOINTS, "false")
         if str(clean).strip().lower() != "true":
             import logging

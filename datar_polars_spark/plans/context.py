@@ -17,6 +17,7 @@ from typing import Any, TYPE_CHECKING
 from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from .cache import Memo, context_memo, file_set_signature
 from .expr import BIN_IMPL, BinOp, Call, Desc, Expr, Ref, UnaryOp
 
 if TYPE_CHECKING:
@@ -25,19 +26,20 @@ if TYPE_CHECKING:
 ORDER_COL = "__datar_ro__"
 POS_COL = "__datar_pos__"
 
-# (file-set, key-set) -> distinct-count bound from parquet footers;
-# bounded FIFO so a long session over many tables stays small
-_FOOTER_BOUND_CACHE: dict = {}
-_FOOTER_BOUND_CACHE_MAX = 256
-# r14: (plan semanticHash, file-set hash, group keys) -> bound. One
-# semanticHash + one inputFiles round trip replace the ~140-call
-# per-attribute plan walk when a semantically identical plan is
-# re-grouped by the same keys — the steady-state case (re-running a
-# pipeline template rebuilds the same plan; semanticHash canonicalizes
-# exprIds, verified stable across rebuilds). The file-set hash keeps
-# the memo honest when the same path gains files mid-session.
-_PLAN_BOUND_CACHE: dict = {}
-
+# Two per-SparkContext memos (``plans.cache``) of footer-derived
+# distinct-count bounds, each bounded FIFO so a long session over many
+# tables stays small:
+# * "footer_bound": (file-set signature, key set) -> bound.
+# * "plan_bound" (r14): (plan semanticHash, file-set signature, group
+#   keys) -> bound. One semanticHash + one inputFiles round trip
+#   replace the ~140-call per-attribute plan walk when a semantically
+#   identical plan is re-grouped by the same keys — the steady-state
+#   case (re-running a pipeline template rebuilds the same plan;
+#   semanticHash canonicalizes exprIds, verified stable across
+#   rebuilds).
+# The file-set signature (name, mtime_ns, size) keeps both honest when
+# a path gains files or a file is rewritten in place mid-session.
+_BOUND_MEMO_SIZE = 256
 
 
 class EvalContext:
@@ -72,7 +74,7 @@ class EvalContext:
         # mutate with several window items shares one EvalContext, so
         # identical requests (row_number + ntile, repeated keys) cost
         # one job, not one per item
-        self._job_cache: dict[tuple, Any] = {}
+        self._job_cache = Memo()
 
     # ---- resolution helpers -------------------------------------------
     def eval(self, node: Any) -> Any:
@@ -265,16 +267,12 @@ class EvalContext:
             ]
             pkey = (
                 jplan.semanticHash(),
-                hash(tuple(sorted(f or "" for f in files))),
+                file_set_signature(files),
                 tuple(self.groups),
             )
-            if pkey in _PLAN_BOUND_CACHE:
-                return _PLAN_BOUND_CACHE[pkey]
-            bound = self._footer_group_bound_walk(jplan, files)
-            if len(_PLAN_BOUND_CACHE) >= _FOOTER_BOUND_CACHE_MAX:
-                _PLAN_BOUND_CACHE.pop(next(iter(_PLAN_BOUND_CACHE)))
-            _PLAN_BOUND_CACHE[pkey] = bound
-            return bound
+            return context_memo("plan_bound", _BOUND_MEMO_SIZE).get_or_make(
+                pkey, lambda: self._footer_group_bound_walk(jplan, files)
+            )
         except Exception:
             return None
 
@@ -322,9 +320,10 @@ class EvalContext:
             # footer reads are pure metadata but not free at the file
             # cap — memoize per (file set, key set) across plan builds
             # (same table re-grouped repeatedly is the common case)
-            memo = (hash(tuple(sorted(files))), tuple(key_cols))
-            if memo in _FOOTER_BOUND_CACHE:
-                return _FOOTER_BOUND_CACHE[memo]
+            memo = context_memo("footer_bound", _BOUND_MEMO_SIZE)
+            mkey = (file_set_signature(files), tuple(key_cols))
+            if mkey in memo:
+                return memo[mkey]
             import pyarrow.parquet as pq
 
             spans: dict[str, list] = {k: [None, None, False] for k in key_cols}
@@ -361,10 +360,7 @@ class EvalContext:
                 if bound > (1 << 40):
                     bound = None  # never broadcast-sized
                     break
-            if len(_FOOTER_BOUND_CACHE) >= _FOOTER_BOUND_CACHE_MAX:
-                _FOOTER_BOUND_CACHE.pop(next(iter(_FOOTER_BOUND_CACHE)))
-            _FOOTER_BOUND_CACHE[memo] = bound
-            return bound
+            return memo.put(mkey, bound)
         except Exception:
             return None
 
@@ -516,21 +512,18 @@ class EvalContext:
             or dtype.startswith("decimal")
         ):
             return None  # approxQuantile needs numerics
-        memo_key = ("bounds", str(key))
-        if memo_key in self._job_cache:
-            bounds = self._job_cache[memo_key]
-            if bounds is None:
-                return None
-        else:
+
+        def quantiles():
             try:
                 nq = self._KEY_BUCKET_QUANTILES
                 qs = [i / nq for i in range(1, nq)]
-                bounds = probe.stat.approxQuantile("__k__", qs, 0.001)
+                return probe.stat.approxQuantile("__k__", qs, 0.001)
             except Exception:
-                bounds = None
-            self._job_cache[memo_key] = bounds
-            if bounds is None:
                 return None
+
+        bounds = self._job_cache.get_or_make(("bounds", str(key)), quantiles)
+        if bounds is None:
+            return None
         bounds = sorted(set(bounds))
         if len(bounds) < 2:
             return None  # low-cardinality key: buckets would all collide
@@ -620,12 +613,10 @@ class EvalContext:
         flag): the offsets job computes the window first, then
         aggregates — only a direct window-inside-agg is illegal."""
         memo_key = ("offsets", str(bucket), str(value), getattr(aggfn, "__name__", ""))
-        if memo_key in self._job_cache:
-            return self._job_cache[memo_key]
-        self._job_cache[memo_key] = out = self._bucket_offsets_uncached(
-            bucket, value, aggfn, combine
+        return self._job_cache.get_or_make(
+            memo_key,
+            lambda: self._bucket_offsets_uncached(bucket, value, aggfn, combine),
         )
-        return out
 
     def _bucket_offsets_uncached(self, bucket, value, aggfn, combine):
         try:
@@ -896,10 +887,8 @@ class EvalContext:
             return simple
         bucket, order_cols = bw
         df = self.tibble.df
-        # one boundary job per (bucket, value, k) — several roll_* items
-        # in the same mutate (sum + mean of one column) share it
-        memo_key = ("roll_bounds", str(bucket), str(value), k)
-        if memo_key not in self._job_cache:
+
+        def tails():
             try:
                 dtype = df.select(value.alias("__v__")).schema[0].dataType
                 rows = (
@@ -923,9 +912,14 @@ class EvalContext:
                     .collect()
                 )
             except Exception:
-                rows, dtype = None, None
-            self._job_cache[memo_key] = (rows, dtype)
-        rows, dtype = self._job_cache[memo_key]
+                return None, None
+            return rows, dtype
+
+        # one boundary job per (bucket, value, k) — several roll_* items
+        # in the same mutate (sum + mean of one column) share it
+        rows, dtype = self._job_cache.get_or_make(
+            ("roll_bounds", str(bucket), str(value), k), tails
+        )
         if not rows or len(rows) > self.MAX_TWO_PASS_BUCKETS:
             return simple
         rows = sorted(rows, key=lambda r: r["__b__"])
@@ -995,9 +989,7 @@ class EvalContext:
         if self._two_pass_windows(None) is None:
             return F.ntile(nval).over(self.ordered())
         rn = self.row_number_over()
-        if ("nrow",) not in self._job_cache:
-            self._job_cache[("nrow",)] = self.tibble.df.count()
-        total = self._job_cache[("nrow",)]
+        total = self._job_cache.get_or_make(("nrow",), self.tibble.df.count)
         base, rem = divmod(total, nval)
         cut = rem * (base + 1)
         tile = F.when(

@@ -1463,6 +1463,9 @@ class _JpegBitReader:
 
 
 _JPEG_LUT_MEMO: dict = {}
+# ~1 MB per entry (two 65,536-entry lists) — bounded per executor:
+# optimized JPEGs carry per-image tables
+_JPEG_LUT_MEMO_CAP = 32
 
 
 def _jpeg_huff_table(bits_counts, values):
@@ -1472,8 +1475,9 @@ def _jpeg_huff_table(bits_counts, values):
     F.2.2.3's per-bit walk, which cost up to 16 bit-reads per symbol
     and dominated the DC raster path (measured 97% of a video
     fingerprint, ~7 bit-reads/symbol average). Memoized on the table
-    bytes: real corpora overwhelmingly ship the Annex K tables, so a
-    long-lived worker builds each LUT once, not once per image."""
+    bytes (bounded like ``embed._ROW_MEMO``): real corpora
+    overwhelmingly ship the Annex K tables, so a long-lived worker
+    builds each LUT once, not once per image."""
     key = (bytes(bits_counts), bytes(values))
     lut = _JPEG_LUT_MEMO.get(key)
     if lut is not None:
@@ -1496,6 +1500,8 @@ def _jpeg_huff_table(bits_counts, values):
             k += 1
         code <<= 1
     lut = (sym.tolist(), lnt.tolist())
+    if len(_JPEG_LUT_MEMO) >= _JPEG_LUT_MEMO_CAP:
+        _JPEG_LUT_MEMO.clear()
     _JPEG_LUT_MEMO[key] = lut
     return lut
 

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.cache import register_internal_cache
+from ..plans.cache import context_memo, context_state, register_internal_cache
 from ..plans.expr import Ref
 from ..plans.verb import verb, verb2
 from ..tibble import Tibble, ensure_tibble
@@ -217,7 +217,10 @@ def _sig_min_udf(num_perm: int):
     the interpreted per-shingle HOF fold and the 64-string-hashes-per-
     shingle explode aggregation. Hash values are bit-identical, so
     signatures, bands, and every downstream join are unchanged."""
-    udf = _SIG_UDFS.get(num_perm)
+    # one UDF object per (context, num_perm): a pandas UDF binds its
+    # JVM function to the context of its first use
+    memo = context_memo("minhash_sig_udf", _UDF_MEMO_SIZE)
+    udf = memo.get(num_perm)
     if udf is not None:
         return udf
     import pandas as pd
@@ -287,12 +290,10 @@ def _sig_min_udf(num_perm: int):
     # ArrowEvalPython nodes for one signing pass). Same device as
     # ivf_assign/lang_id/text_embed; apply selective filters before
     # signing, as the internal callers already do.
-    _sig = _sig.asNondeterministic()
-    _SIG_UDFS[num_perm] = _sig
-    return _sig
+    return memo.put(num_perm, _sig.asNondeterministic())
 
 
-_SIG_UDFS: dict[int, Any] = {}
+_UDF_MEMO_SIZE = 16
 
 
 def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
@@ -333,16 +334,20 @@ def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
 # LAZY census frame with a single `dropped` column = estimated candidate
 # pairs it removed. dropped_pairs_estimate(op) runs the census on demand
 # (one small aggregate job per guard) so a pipeline can alert on recall
-# loss instead of scraping warning logs. Keyed per op; each top-level op
-# call resets its own key, so the estimate always describes the most
-# recent invocation.
-_DROPPED_PAIRS: dict[str, list[DataFrame]] = {}
+# loss instead of scraping warning logs. Keyed per op in the active
+# SparkContext's state (plans.cache); each top-level op call resets its
+# own key, so the estimate always describes the most recent invocation.
 
 
-def _register_dropped_pairs(op: str, frame: DataFrame, reset: bool = True) -> None:
+def _register_dropped_pairs(op: str, frame: DataFrame | None = None,
+                            reset: bool = True) -> None:
+    """Record ``op``'s census ``frame`` (a ``dropped`` column);
+    ``reset`` first forgets what earlier calls of ``op`` recorded."""
+    records = context_state().setdefault("dropped_pairs", {})
     if reset:
-        _DROPPED_PAIRS[op] = []
-    _DROPPED_PAIRS.setdefault(op, []).append(frame)
+        records[op] = []
+    if frame is not None:
+        records.setdefault(op, []).append(frame)
 
 
 def dropped_pairs_estimate(op: str) -> float:
@@ -355,7 +360,7 @@ def dropped_pairs_estimate(op: str) -> float:
     The bucket-cap figure is an upper bound: a pair dropped from one
     oversized bucket may still be a candidate via another band."""
     total = 0.0
-    for fr in _DROPPED_PAIRS.get(op, []):
+    for fr in context_state().get("dropped_pairs", {}).get(op, []):
         v = fr.agg(F.sum("dropped").alias("d")).first()["d"]
         total += float(v or 0.0)
     return total
@@ -400,36 +405,29 @@ def hyperplane_recall(cosine: float, bands: int, planes_per_band: int) -> float:
 
 def _cap_buckets(
     banded: DataFrame, keys: list[str], max_bucket: int,
-    log_dropped: bool = False, op: str | None = None,
+    op: str | None = None,
 ) -> DataFrame:
     """Skew guard for LSH bucket self-joins: buckets larger than
     ``max_bucket`` members (giant boilerplate/duplicate clusters in web
     corpora) would make the candidate join O(bucket^2); drop them from
     candidate generation. Exact/fingerprint dedup should run first so
     oversized buckets are rare (see minhash_dedup). The bucket census is
-    a tiny aggregate broadcast back as an anti-join."""
+    a tiny aggregate broadcast back as an anti-join. With ``op``, the
+    census of dropped pairs is recorded for ``dropped_pairs_estimate(op)``,
+    which runs it on demand: building the plan runs no job."""
     counts = banded.groupBy(*keys).count()
-    oversized = counts.filter(F.col("count") > max_bucket).select(*keys)
+    oversized = counts.filter(F.col("count") > max_bucket)
     if op is not None:
         _register_dropped_pairs(
             op,
-            counts.filter(F.col("count") > max_bucket).select(
+            oversized.select(
                 (F.col("count") * (F.col("count") - 1) / 2).alias("dropped")
             ),
             reset=False,
         )
-    if log_dropped:
-        import logging
-
-        n = oversized.count()
-        if n:
-            logging.getLogger(__name__).warning(
-                "LSH bucket cap: %d buckets over %d members dropped from "
-                "candidate generation",
-                n,
-                max_bucket,
-            )
-    return banded.join(F.broadcast(oversized), on=keys, how="left_anti")
+    return banded.join(
+        F.broadcast(oversized.select(*keys)), on=keys, how="left_anti"
+    )
 
 
 def _shingles(col: Column, shingle_words: int, analyzer: str,
@@ -515,7 +513,6 @@ def minhash_pairs(
     shingle_words: int = 3,
     threshold: float = 0.7,
     max_bucket: int = 1000,
-    log_dropped: bool = False,
     analyzer: str = "word",
     shingle_chars: int = 12,
 ) -> Tibble:
@@ -531,7 +528,7 @@ def minhash_pairs(
     ``max_bucket`` members are excluded from candidate generation (run
     exact dedup first — minhash_dedup does — so they only arise from
     pathological boilerplate)."""
-    _DROPPED_PAIRS["minhash_pairs"] = []
+    _register_dropped_pairs("minhash_pairs")
     tname, idn = _name_of(text), _name_of(id_col)
     rows_per_band = num_perm // bands
     base = _minhash_sigs(
@@ -557,7 +554,7 @@ def minhash_pairs(
     banded = minhash_banded(base.select("id", "sig"), "sig", bands, rows_per_band)
     banded = _cap_buckets(
         banded.select("band", "bhash", "id"),
-        ["band", "bhash"], max_bucket, log_dropped, op="minhash_pairs"
+        ["band", "bhash"], max_bucket, op="minhash_pairs"
     )
     left = banded.select("band", "bhash", F.col("id").alias("id_a"))
     right = banded.select("band", "bhash", F.col("id").alias("id_b"))
@@ -600,7 +597,6 @@ def minhash_join(
     shingle_words: int = 3,
     threshold: float = 0.7,
     max_bucket: int = 1000,
-    log_dropped: bool = False,
     verify: str = "estimate",
     analyzer: str = "word",
     shingle_chars: int = 12,
@@ -626,7 +622,7 @@ def minhash_join(
     capping applies per side so a boilerplate mega-bucket on either
     corpus can't go quadratic. Text/id column names are shared by both
     sides (select/rename first if they differ)."""
-    _DROPPED_PAIRS["minhash_join"] = []
+    _register_dropped_pairs("minhash_join")
     if verify not in ("estimate", "exact"):
         raise ValueError(f"verify must be 'estimate' or 'exact', got {verify!r}")
     left, right = ensure_tibble(left), ensure_tibble(right)
@@ -654,7 +650,7 @@ def minhash_join(
         banded = minhash_banded(sig.select("id", "sig"), "sig", bands, rows_per_band)
         banded = _cap_buckets(
             banded.select("band", "bhash", "id"),
-            ["band", "bhash"], max_bucket, log_dropped, op="minhash_join"
+            ["band", "bhash"], max_bucket, op="minhash_join"
         )
         sides.append(
             banded.select("band", "bhash", F.col("id").alias(f"id_{tag}"))
@@ -1027,7 +1023,7 @@ def simhash_dedup(
     skew exactly as in minhash_dedup; ``resolve`` and the quality-based
     ``keep_by``/``keep`` winner policy (requires
     ``resolve='components'``) as in minhash_dedup."""
-    _DROPPED_PAIRS["simhash_dedup"] = []
+    _register_dropped_pairs("simhash_dedup")
     tname, idn = _name_of(text), _name_of(id_col)
     kname = None
     if keep_by is not None:
@@ -1169,7 +1165,7 @@ def embedding_cosine_pairs(
     the corpus has identical-vector clusters. At planet scale, lower
     candidate volume further with more planes_per_band (AND) plus more
     bands (OR), or pre-cluster with IVF (scale/similarity.py)."""
-    _DROPPED_PAIRS["embedding_cosine_pairs"] = []
+    _register_dropped_pairs("embedding_cosine_pairs")
     ename, idn = _name_of(embedding), _name_of(id_col)
     base = _ensure_parallelism(
         td.df.select(F.col(idn).alias("id"), F.col(ename).alias("vec"))
@@ -1276,7 +1272,7 @@ def embedding_join(
     # reset accounting up front: a broadcast call is EXACT (drops
     # nothing), and a stale figure from a previous LSH call must not
     # survive it (dropped_pairs_estimate describes the LATEST call)
-    _DROPPED_PAIRS["embedding_join"] = []
+    _register_dropped_pairs("embedding_join")
 
     rows = None
     if mode in ("auto", "broadcast"):

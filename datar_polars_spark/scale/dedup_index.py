@@ -59,9 +59,9 @@ from pyspark.sql import functions as F
 from ..tibble import Tibble, ensure_tibble
 from .dedup import (
     _cap_buckets,
-    _DROPPED_PAIRS,
     _minhash_sigs,
     _name_of,
+    _register_dropped_pairs,
     _shingles,
 )
 from .jsonio import read_json_file, write_json_file
@@ -294,7 +294,7 @@ def dedup_index_build(
     # dropped_pairs_estimate() documents "most recent call" semantics:
     # reset this op's census list at entry (also releases the frame
     # references the registry would otherwise retain indefinitely)
-    _DROPPED_PAIRS["dedup_index_build"] = []
+    _register_dropped_pairs("dedup_index_build")
     td = ensure_tibble(corpus)
     tname, idn = _name_of(text), _name_of(id_col)
     meta = {
@@ -351,7 +351,7 @@ def dedup_index_append(
     (existence is what drops a future dup) and avoids rewriting the
     store; rebuild when the accumulated duplication is worth
     reclaiming."""
-    _DROPPED_PAIRS["dedup_index_append"] = []
+    _register_dropped_pairs("dedup_index_append")
     td = ensure_tibble(batch)
     meta = _load_meta(td.df.sparkSession, path)
     tname = _name_of(text) if text is not None else meta["text_col"]
@@ -457,7 +457,6 @@ def match_against_index(
     threshold: float = 0.7,
     max_bucket: int = 1000,
     verify: str = "estimate",
-    log_dropped: bool = False,
     min_stamp: int | None = None,
 ) -> Tibble:
     """All (batch doc, indexed doc) duplicate matches: columns
@@ -484,16 +483,16 @@ def match_against_index(
     return _match(
         td, path, _load_meta(td.df.sparkSession, path), text, id_col,
         threshold=threshold, max_bucket=max_bucket, verify=verify,
-        log_dropped=log_dropped, min_stamp=min_stamp,
+        min_stamp=min_stamp,
     )
 
 
 def _match(td: Tibble, path: str, meta: dict, text, id_col, *,
-           threshold, max_bucket, verify, log_dropped, min_stamp) -> Tibble:
+           threshold, max_bucket, verify, min_stamp) -> Tibble:
     """match_against_index over an already loaded sidecar."""
     if verify not in ("estimate", "exact"):
         raise ValueError(f"verify must be 'estimate' or 'exact', got {verify!r}")
-    _DROPPED_PAIRS["match_against_index"] = []
+    _register_dropped_pairs("match_against_index")
     spark = td.df.sparkSession
     from .fp_index import _prune_expired, retention_cutoff
 
@@ -619,7 +618,7 @@ def _match(td: Tibble, path: str, meta: dict, text, id_col, *,
     # carried here; dedupe bare pairs first, join payloads back once
     banded_a = _pin(_cap_buckets(
         minhash_banded(sig_a, "sig", meta["bands"], rows_per_band),
-        ["band", "bhash"], max_bucket, log_dropped, op="match_against_index",
+        ["band", "bhash"], max_bucket, op="match_against_index",
     ).select("band", "bhash", F.col("id").alias("id_a")))
     # the store was capped at build/append time (see _build_stores) —
     # no index-side census here, matching scans the postings exactly
@@ -707,7 +706,6 @@ def dedup_against_index(
     max_bucket: int = 1000,
     verify: str = "estimate",
     append: bool = False,
-    log_dropped: bool = False,
     min_stamp: int | None = None,
     stamp: int | str = 0,
 ) -> Tibble:
@@ -734,7 +732,7 @@ def dedup_against_index(
     hits = _match(
         td, path, meta, text, id_col,
         threshold=threshold, max_bucket=max_bucket,
-        verify=verify, log_dropped=log_dropped, min_stamp=min_stamp,
+        verify=verify, min_stamp=min_stamp,
     )
     idn = _name_of(id_col) if id_col is not None else meta["id_col"]
     surv = td.df.select(*td.columns).join(
@@ -834,7 +832,7 @@ def dedup_index_compact(spark, path: str) -> dict:
     from .jsonio import replace_dir
 
     meta = _load_meta(spark, path)
-    _DROPPED_PAIRS["dedup_index_compact"] = []
+    _register_dropped_pairs("dedup_index_compact")
     idt = meta["id_type"]
     stamped = bool(meta.get("stamps"))
     eff = int(meta.get("expire_before") or 0) if stamped else 0
@@ -907,9 +905,10 @@ def dedup_index_compact(spark, path: str) -> dict:
     # the cap census is lazy over the LIVE bands path — pin its value
     # before the swap replaces what that path contains
     dropped = dropped_pairs_estimate("dedup_index_compact")
-    _DROPPED_PAIRS["dedup_index_compact"] = [
-        spark.createDataFrame([(float(dropped),)], "dropped double")
-    ]
+    _register_dropped_pairs(
+        "dedup_index_compact",
+        spark.createDataFrame([(float(dropped),)], "dropped double"),
+    )
     for name in [*stores, "bands"]:
         replace_dir(spark, f"{path}/{name}__compact", f"{path}/{name}")
     # tombstones are folded into the rewritten stores: clear the

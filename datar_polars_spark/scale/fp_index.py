@@ -57,7 +57,7 @@ from typing import Any, Callable
 from pyspark.sql import functions as F
 
 from ..tibble import Tibble, ensure_tibble
-from .dedup import _cap_buckets, _DROPPED_PAIRS, _ensure_parallelism, _name_of
+from .dedup import _cap_buckets, _ensure_parallelism, _name_of, _register_dropped_pairs
 from .jsonio import read_json_file, replace_dir, write_json_file
 from .lsh import fp_banded
 from ..plans.cache import reliable_checkpoint
@@ -194,7 +194,7 @@ def fp_index_build(
     op = fam.op("build")
     if max_hamming < 0:
         raise ValueError(f"{op}: max_hamming must be >= 0, got {max_hamming}")
-    _DROPPED_PAIRS[op] = []
+    _register_dropped_pairs(op)
     td = ensure_tibble(corpus)
     cname, idn = _name_of(content), _name_of(id_col)
     meta = {
@@ -286,7 +286,7 @@ def fp_index_append(
     # — rows stamped below an active watermark are admitted but never
     # match (and fold away at the next compact).
     op = fam.op("append")
-    _DROPPED_PAIRS[op] = []
+    _register_dropped_pairs(op)
     td = ensure_tibble(batch)
     meta = load_meta(fam, td.df.sparkSession, path)
     cname = _name_of(content) if content is not None else meta["content_col"]
@@ -471,7 +471,7 @@ def fp_match_with_base(
     release the persist deterministically via unregister_internal_cache
     instead of waiting on FIFO eviction."""
     op = fam.op_match
-    _DROPPED_PAIRS[op] = []
+    _register_dropped_pairs(op)
     td = ensure_tibble(batch)
     spark = td.df.sparkSession
     meta = load_meta(fam, spark, path)
@@ -636,7 +636,7 @@ def fp_index_compact(fam: FpFamily, spark, path: str) -> dict:
 
     op = fam.op("compact")
     meta = load_meta(fam, spark, path)
-    _DROPPED_PAIRS[op] = []
+    _register_dropped_pairs(op)
     idt = meta["id_type"]
     fp = fam.fp_col
     stamped = bool(meta.get("stamps"))
@@ -679,9 +679,10 @@ def fp_index_compact(fam: FpFamily, spark, path: str) -> dict:
         f"{path}/postings__compact"
     )
     dropped = dropped_pairs_estimate(op)
-    _DROPPED_PAIRS[op] = [
-        spark.createDataFrame([(float(dropped),)], "dropped double")
-    ]
+    _register_dropped_pairs(
+        op,
+        spark.createDataFrame([(float(dropped),)], "dropped double"),
+    )
     replace_dir(spark, f"{path}/hashes__compact", f"{path}/hashes")
     replace_dir(spark, f"{path}/postings__compact", f"{path}/postings")
     # the rewritten stores no longer hold the dead ids: clear the

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..plans.expr import Ref
 from ..plans.verb import verb
 from ..tibble import Tibble
-from ..plans.cache import reliable_checkpoint
+from ..plans.cache import context_state, reliable_checkpoint
 
 __all__ = [
     "connected_components",
@@ -350,8 +350,9 @@ def pagerank(
             # empty graph: zero rows with the caller's node dtype; the
             # accounting must still describe THIS call, not the previous
             # one (0 rounds ran, no delta)
-            _PAGERANK_LAST.clear()
-            _PAGERANK_LAST.update({"iterations": 0, "delta": None})
+            context_state()["pagerank_last"] = {
+                "iterations": 0, "delta": None,
+            }
             out0 = nodes.select(
                 F.col("u").alias("node"), F.lit(1.0).alias("rank")
             ).transform(reliable_checkpoint, eager=True)
@@ -431,8 +432,9 @@ def pagerank(
                 del live[:-1]
                 if delta is not None and delta < tol:
                     break
-        _PAGERANK_LAST.clear()
-        _PAGERANK_LAST.update({"iterations": done, "delta": delta})
+        last = context_state()["pagerank_last"] = {
+            "iterations": done, "delta": delta,
+        }
         final = ranks.select(
             F.col("u").alias("node"), F.col("r").alias("rank")
         )
@@ -440,7 +442,7 @@ def pagerank(
         # capped plan-string conf — the plan-lock tests assert on this
         # (the returned frame below is a flat checkpoint scan, so the
         # iteration structure is no longer visible from outside)
-        _PAGERANK_LAST["plan"] = (
+        last["plan"] = (
             final._jdf.queryExecution().executedPlan().toString()
         )
         # Materialize the result as an eager checkpoint, then release
@@ -464,19 +466,15 @@ def pagerank(
             pass
 
 
-
-_PAGERANK_LAST: dict = {}
-
-
 def pagerank_last_run() -> dict:
-    """Accounting for the most recent :func:`pagerank` call in this
-    process: ``{"iterations": rounds executed, "delta": final L1
-    change or None when tol wasn't requested, "plan": the last
+    """Accounting for the most recent :func:`pagerank` call under the
+    active SparkContext: ``{"iterations": rounds executed, "delta":
+    final L1 change or None when tol wasn't requested, "plan": the last
     generation's executed-plan text (rendered under the call's bounded
     plan-string cap; absent for an empty graph)}`` — the returned
     frame itself is a flat checkpoint scan, so the iteration plan is
     only observable here."""
-    return dict(_PAGERANK_LAST)
+    return dict(context_state().get("pagerank_last", {}))
 
 
 def join_host_rank(

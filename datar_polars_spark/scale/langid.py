@@ -34,14 +34,17 @@ deployment retrains on a larger labeled sample with the same call.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
+import pickle
 import zlib
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
 
+from ..plans.cache import context_memo
 from ..tibble import Tibble, ensure_tibble
 
 __all__ = [
@@ -422,6 +425,10 @@ def lang_id_train_seed(spark, **kwargs) -> dict:
     return lang_id_train(seed_corpus(spark), "text", "lang", **kwargs)
 
 
+# lang_id_predict's per-context memo of model broadcasts
+_BROADCAST_MEMO_SIZE = 4
+
+
 def lang_id_predict(
     td: Any,
     model: dict,
@@ -498,8 +505,19 @@ def lang_id_predict(
     # r15 (guide §4.5): the dense matrix rides a BROADCAST, not the UDF
     # closure — a closure is re-pickled and shipped per TASK (~3 MB x
     # n_tasks per pass at the 2^15 x 12 default); a broadcast crosses
-    # once per executor and is cached
-    _bc = td.df.sparkSession.sparkContext.broadcast((W, prior, langs))
+    # once per executor and is cached. Repeated calls with one model
+    # share it: the context memoizes it by a digest of its content (a
+    # model mutated in place gets a fresh one) and unpersists, never
+    # destroys, what it evicts — a plan built earlier re-ships it.
+    sc = td.df.sparkSession.sparkContext
+    dense = (W, prior, langs)
+    _bc = context_memo(
+        "lang_id_broadcast", _BROADCAST_MEMO_SIZE, sc,
+        on_evict=lambda bc: bc.unpersist(),
+    ).get_or_make(
+        hashlib.blake2b(pickle.dumps(dense)).digest(),
+        lambda: sc.broadcast(dense),
+    )
 
     @pandas_udf("struct<lang:string, conf:double>")
     def _score(s: pd.Series) -> pd.DataFrame:

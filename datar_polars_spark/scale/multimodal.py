@@ -780,9 +780,9 @@ def image_near_dup_pairs(
     clusters are bucket-capped (drop volume registers under op
     ``"image_near_dup_pairs"`` for dropped_pairs_estimate). Everything
     after the one Arrow hash pass is JVM expressions."""
-    from .dedup import _DROPPED_PAIRS
+    from .dedup import _register_dropped_pairs
 
-    _DROPPED_PAIRS["image_near_dup_pairs"] = []
+    _register_dropped_pairs("image_near_dup_pairs")
     if max_hamming < 0:
         raise ValueError("image_near_dup_pairs: max_hamming must be >= 0")
     hashed = image_dhash(td, content, out_col="__fp__", strict=strict)
@@ -919,9 +919,9 @@ def audio_near_dup_pairs(
     ``bit_count(a ^ b)``. Giant identical clusters are bucket-capped
     (drop volume registers under op ``"audio_near_dup_pairs"``).
     Everything after the one Arrow hash pass is JVM expressions."""
-    from .dedup import _DROPPED_PAIRS
+    from .dedup import _register_dropped_pairs
 
-    _DROPPED_PAIRS["audio_near_dup_pairs"] = []
+    _register_dropped_pairs("audio_near_dup_pairs")
     if max_hamming < 0:
         raise ValueError("audio_near_dup_pairs: max_hamming must be >= 0")
     hashed = audio_fingerprint(td, content, out_col="__fp__", strict=strict)
@@ -1158,9 +1158,9 @@ def video_near_dup_pairs(
     ``bit_count(a ^ b)``. Giant identical clusters are bucket-capped
     (drop volume registers under op ``"video_near_dup_pairs"``).
     Everything after the one Arrow hash pass is JVM expressions."""
-    from .dedup import _DROPPED_PAIRS
+    from .dedup import _register_dropped_pairs
 
-    _DROPPED_PAIRS["video_near_dup_pairs"] = []
+    _register_dropped_pairs("video_near_dup_pairs")
     if max_hamming < 0:
         raise ValueError("video_near_dup_pairs: max_hamming must be >= 0")
     hashed = video_fingerprint(td, content, out_col="__fp__", strict=strict)
@@ -1196,12 +1196,12 @@ def _perceptual_dedup(
     ``keep="max"`` each exact cluster's rep is its best member, so the
     component winner among reps is the best member overall."""
     from .dedup import (
-        _DROPPED_PAIRS,
         _drop_duplicates_by_pairs,
+        _register_dropped_pairs,
         _keep_ordkey,
     )
 
-    _DROPPED_PAIRS[op] = []
+    _register_dropped_pairs(op)
     if keep not in ("min", "max"):
         raise ValueError(f"{op}: keep must be 'min' or 'max', got {keep!r}")
     if keep_by is not None and resolve != "components":

@@ -43,9 +43,9 @@ from pyspark.sql import functions as F
 from ..tibble import Tibble, ensure_tibble
 from .dedup import (
     _cap_buckets,
-    _DROPPED_PAIRS,
     _ensure_parallelism,
     _name_of,
+    _register_dropped_pairs,
     cosine_sim,
 )
 from .jsonio import read_json_file, write_json_file
@@ -180,7 +180,7 @@ def semantic_index_build(
     the curve); matching cannot change them without rebuilding."""
     # "most recent call" semantics for dropped_pairs_estimate: reset
     # this op's census list at entry (also drops retained frame refs)
-    _DROPPED_PAIRS["semantic_index_build"] = []
+    _register_dropped_pairs("semantic_index_build")
     td = ensure_tibble(corpus)
     ename, idn = _name_of(embedding), _name_of(id_col)
     first = (
@@ -244,7 +244,7 @@ def semantic_index_append(
     (parameters from the sidecar; columns default to the build-time
     names). A zero-dim sidecar (built from an all-NULL corpus) adopts
     the first appended batch's dimensionality."""
-    _DROPPED_PAIRS["semantic_index_append"] = []
+    _register_dropped_pairs("semantic_index_append")
     td = ensure_tibble(batch)
     spark = td.df.sparkSession
     meta = _load_meta(spark, path)
@@ -374,7 +374,7 @@ def match_against_semantic_index(
     replica resolves in the narrow hash join). Leaves the "all
     matches" contract deliberately incomplete; the public default
     keeps it complete."""
-    _DROPPED_PAIRS["match_against_semantic_index"] = []
+    _register_dropped_pairs("match_against_semantic_index")
     td = ensure_tibble(batch)
     spark = td.df.sparkSession
     meta = _load_meta(spark, path)
@@ -655,7 +655,7 @@ def semantic_index_compact(spark, path: str) -> dict:
     from .jsonio import replace_dir
 
     meta = _load_meta(spark, path)
-    _DROPPED_PAIRS["semantic_index_compact"] = []
+    _register_dropped_pairs("semantic_index_compact")
     idt, vt = meta["id_type"], meta["vec_type"]
     stamped = bool(meta.get("stamps"))
     eff = int(meta.get("expire_before") or 0) if stamped else 0
@@ -705,9 +705,10 @@ def semantic_index_compact(spark, path: str) -> dict:
     # pin the lazy cap census before the swap changes what the live
     # postings path contains
     dropped = dropped_pairs_estimate("semantic_index_compact")
-    _DROPPED_PAIRS["semantic_index_compact"] = [
-        spark.createDataFrame([(float(dropped),)], "dropped double")
-    ]
+    _register_dropped_pairs(
+        "semantic_index_compact",
+        spark.createDataFrame([(float(dropped),)], "dropped double"),
+    )
     replace_dir(spark, f"{path}/vectors__compact", f"{path}/vectors")
     replace_dir(spark, f"{path}/postings__compact", f"{path}/postings")
     # tombstones are folded into the rewritten stores: clear the

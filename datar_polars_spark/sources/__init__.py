@@ -10,7 +10,7 @@ Opening a parquet path runs no Spark job: ``read_parquet`` takes the
 schema from one driver-side footer read of the file Spark's own
 inference would read (``_open_parquet``), and the same footer answers
 the TIMESTAMP(NANOS) check. Repeated reads of an unchanged path reuse
-the first read's lazy plan (``_READ_MEMO``).
+the first read's lazy plan (a per-SparkContext memo).
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
+from ..plans.cache import context_memo, file_set_signature
 from ..tibble import Tibble
 
 TABLES = (
@@ -54,17 +55,15 @@ def _restore_levels(df) -> Tibble:
     return out
 
 
-# Session-scoped lazy-PLAN memo for repeated reads of the same path.
-# A miss lists the path twice and reads one footer on the driver (see
-# ``_open_parquet``): no Spark job, but two data-source resolutions and
-# a few dozen Py4J round trips per plan build. The memo
-# returns the SAME lazy DataFrame (plan) when the path's file set
-# (name, mtime, size) is unchanged; no rows or results are cached —
-# every action still computes from the parquet files, and a rewritten
-# or appended path changes the signature and misses. Keyed on the
-# application id so a new session never sees a dead plan.
-_READ_MEMO: dict = {}
-_READ_MEMO_MAX = 64
+# Lazy-PLAN memo for repeated reads of the same path, one per
+# SparkContext (``plans.cache``). A miss lists the path twice and reads
+# one footer on the driver (see ``_open_parquet``): no Spark job, but
+# two data-source resolutions and a few dozen Py4J round trips per
+# plan build. The memo returns the SAME lazy DataFrame (plan) when the
+# path's file set (name, mtime, size) is unchanged; no rows or results
+# are cached — every action still computes from the parquet files, and
+# a rewritten or appended path changes the signature and misses.
+_READ_MEMO_SIZE = 64
 
 
 def _parquet_sig(path: str):
@@ -72,63 +71,50 @@ def _parquet_sig(path: str):
     dir's data files live in partition SUBdirectories, and r14's
     top-level-only scandir keyed on ``_SUCCESS`` alone there — a
     non-Spark writer dropping a file into ``k=1/`` without touching
-    ``_SUCCESS`` served a stale plan. Walking every data file (relpath,
+    ``_SUCCESS`` served a stale plan. Walking every data file (name,
     mtime_ns, size) catches appends, rewrites and deletes at any depth;
     the walk is driver-side microseconds against the JVM re-list and
     footer read a memo hit saves."""
     import os
 
-    try:
-        if os.path.isdir(path):
-            sig = []
-            for root, _dirs, files in os.walk(path):
-                rel = os.path.relpath(root, path)
-                for name in files:
-                    if name.endswith(".parquet") or name == "_SUCCESS":
-                        st = os.stat(os.path.join(root, name))
-                        sig.append(
-                            (os.path.join(rel, name),
-                             st.st_mtime_ns, st.st_size)
-                        )
-            return tuple(sorted(sig))
-        st = os.stat(path)
-        return ((path, st.st_mtime_ns, st.st_size),)
-    except OSError:
-        return None
+    if not os.path.isdir(path):
+        return file_set_signature([path])
+    return file_set_signature(
+        os.path.join(root, name)
+        for root, _dirs, files in os.walk(path)
+        for name in files
+        if name.endswith(".parquet") or name == "_SUCCESS"
+    )
 
 
 def read_parquet(spark: SparkSession, path: str) -> Tibble:
     """Parquet scan; transparently handles TIMESTAMP(NANOS) columns,
     which Spark's vectorized reader rejects (events.parquet uses ns
     precision): those are read as nano longs and converted to
-    microsecond timestamps JVM-side — still a distributed scan. Factor
-    levels persisted by write_parquet are restored from column
+    microsecond timestamps JVM-side by integer division truncating
+    toward zero (as pyarrow's cast does) — still a distributed scan.
+    Factor levels persisted by write_parquet are restored from column
     metadata. Opening the path runs no Spark job (see
     ``_open_parquet``); re-reading an unchanged path reuses the first
-    read's lazy plan (see ``_READ_MEMO``)."""
+    read's lazy plan (a per-SparkContext memo, see ``plans.cache``)."""
     sig = _parquet_sig(path)
-    key = None
+    memo = context_memo("read_parquet", _READ_MEMO_SIZE)
+    key = (path, sig)
     if sig is not None:
-        try:
-            key = (spark.sparkContext.applicationId, path, sig)
-        except Exception:
-            key = None
-        if key is not None:
-            hit = _READ_MEMO.get(key)
-            if hit is not None:
-                return _restore_levels(hit)
+        hit = memo.get(key)
+        if hit is not None:
+            return _restore_levels(hit)
     df, ns_cols = _open_parquet(spark, path)
     if ns_cols:
         from pyspark.sql import functions as F
 
         for c in ns_cols:
+            name = c.replace("`", "``")
             df = df.withColumn(
-                c, F.timestamp_micros((F.col(c) / 1000).cast("long"))
+                c, F.timestamp_micros(F.expr(f"`{name}` div 1000"))
             )
-    if key is not None:
-        if len(_READ_MEMO) >= _READ_MEMO_MAX:
-            _READ_MEMO.pop(next(iter(_READ_MEMO)))
-        _READ_MEMO[key] = df
+    if sig is not None:
+        memo.put(key, df)
     return _restore_levels(df)
 
 

@@ -601,7 +601,7 @@ def stream_near_dedup(
     miss. Dropped-candidate accounting registers under op
     ``"stream_near_dedup"`` (see ``dropped_pairs_estimate``)."""
     from ..scale.dedup import (
-        _DROPPED_PAIRS, _cap_buckets, _minhash_sigs, _shingles,
+        _cap_buckets, _minhash_sigs, _register_dropped_pairs, _shingles,
         minhash_signature, word_shingles,
     )
     from ..scale.lsh import minhash_band_hashes, minhash_banded
@@ -678,7 +678,7 @@ def stream_near_dedup(
         _shingles(F.col(tname), shingle_words, analyzer, shingle_chars),
         num_perm,
     )
-    _DROPPED_PAIRS["stream_near_dedup"] = []
+    _register_dropped_pairs("stream_near_dedup")
     s_all = sdf.withColumn("__sig", sig)
     # docs with no shingles (NULL/empty text) sign all-NULL and can
     # never verify a match; matches mode drops them up front, mirroring

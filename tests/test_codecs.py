@@ -773,6 +773,17 @@ class TestJpegHuffmanLut:
                 return values[valptr[ln] + c - mincode[ln]]
         raise ValueError("bad code")
 
+    def test_lut_memo_stays_bounded(self):
+        """Optimized JPEGs carry per-image tables: the per-worker LUT
+        memo must not grow with the corpus."""
+        from datar_polars_spark.scale import codecs
+
+        counts = bytes([1] + [0] * 15)
+        for v in range(codecs._JPEG_LUT_MEMO_CAP + 5):
+            codecs._jpeg_huff_table(counts, bytes([v]))
+            assert len(codecs._JPEG_LUT_MEMO) <= codecs._JPEG_LUT_MEMO_CAP
+        assert codecs._jpeg_huff_table(counts, bytes([7]))[0][0] == 7
+
     def test_lut_matches_spec_walk_on_random_tables(self):
         import random
 

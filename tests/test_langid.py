@@ -387,3 +387,48 @@ def test_min_conf_und_floor(spark, model):
     assert out_null[1] == "en" and out_null[2] is None
     with pytest.raises(ValueError, match="min_conf"):
         lang_id_predict(td, model, "text", out_col="p3", min_conf=1.5)
+
+
+def test_predict_reuses_one_broadcast_per_model(spark, model, monkeypatch):
+    """Repeated predictions with one model share one broadcast of its
+    dense matrix; a model mutated in place gets a fresh one, and the
+    bounded memo unpersists (never destroys) what it evicts."""
+    import copy
+
+    from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
+
+    from datar_polars_spark.plans.cache import context_state
+    from datar_polars_spark.scale import langid
+
+    made, unpersisted = [], []
+    real_broadcast, real_unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def broadcast(self, value):
+        made.append(real_broadcast(self, value))
+        return made[-1]
+
+    def unpersist(self, blocking=False):
+        unpersisted.append(self)
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    monkeypatch.setattr(langid, "_BROADCAST_MEMO_SIZE", 1)
+    context_state().pop("lang_id_broadcast", None)
+    m = copy.deepcopy(model)
+    td = _held_out_tbl(spark)
+
+    def scores():
+        out = lang_id_predict(td, m, "text").df
+        return sorted(map(tuple, out.select("text", "lang_pred", "lang_conf")
+                          .collect()))
+
+    first = scores()
+    assert scores() == first
+    assert len(made) == 1
+    m["log_prior"][m["langs"][0]] += 1.0  # in place: a new digest
+    lang_id_predict(td, m, "text")
+    assert len(made) == 2
+    assert made[0] in unpersisted
+    assert list(context_state()["lang_id_broadcast"].values()) == made[1:]

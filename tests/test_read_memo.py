@@ -1,6 +1,6 @@
-"""r14 plan-build memos: the session-scoped read_parquet lazy-PLAN memo
-(sources._READ_MEMO) and the semanticHash-keyed footer-bound memo
-(plans.context._PLAN_BOUND_CACHE).
+"""r14 plan-build memos, held per SparkContext in plans.cache: the
+read_parquet lazy-PLAN memo ("read_parquet") and the semanticHash-keyed
+footer-bound memo ("plan_bound").
 
 Both are METADATA memos: no rows or results are ever cached — every
 action still computes from the parquet files. The load-bearing property
@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 
 from datar_polars_spark import sources
+from datar_polars_spark.plans.cache import context_memo
 from datar_polars_spark.sources import read_parquet, write_parquet
 from datar_polars_spark.tibble import Tibble
 
@@ -76,12 +77,14 @@ def test_raw_file_append_into_partition_dir_invalidates_memo(
 
 
 def test_memo_bounded(spark, tmp_path):
-    start = len(sources._READ_MEMO)
+    memo = context_memo("read_parquet", sources._READ_MEMO_SIZE)
+    start = len(memo)
     for i in range(3):
         _write(spark, tmp_path / f"m{i}", 2)
         read_parquet(spark, str(tmp_path / f"m{i}"))
-    assert len(sources._READ_MEMO) <= sources._READ_MEMO_MAX
-    assert len(sources._READ_MEMO) >= min(start + 3, sources._READ_MEMO_MAX)
+    assert memo is context_memo("read_parquet", sources._READ_MEMO_SIZE)
+    assert len(memo) <= sources._READ_MEMO_SIZE
+    assert len(memo) >= min(start + 3, sources._READ_MEMO_SIZE)
 
 
 def test_footer_bound_walk_runs_once_per_plan(spark, tmp_path, monkeypatch):
@@ -122,3 +125,32 @@ def test_footer_bound_walk_runs_once_per_plan(spark, tmp_path, monkeypatch):
     _write(spark, p, 50)
     build()
     assert len(calls) > n1
+
+
+def test_rewritten_file_refreshes_footer_bound(spark, tmp_path):
+    """Both bound memos key on the file-set signature (name, mtime_ns,
+    size): rewriting a file under the same name must not serve the old
+    footer bound. Here the old bound (10 groups) would keep a forced
+    broadcast hint on an aggregate side whose keys now span 2,000,000
+    values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datar_polars_spark import f, group_by, mutate
+    from datar_polars_spark.functions import mean
+
+    p = str(tmp_path / "t.parquet")
+
+    def hinted(keys):
+        pq.write_table(
+            pa.table({"k": pa.array(keys, pa.int64()),
+                      "x": [1.0] * len(keys)}),
+            p,
+        )
+        td = read_parquet(spark, p) >> group_by(f.k)
+        out = td >> mutate(m=mean(f.x))
+        plan = out.df._jdf.queryExecution().analyzed().toString()
+        return "strategy=broadcast" in plan
+
+    assert hinted(list(range(10)))
+    assert not hinted([0, 1_999_999])

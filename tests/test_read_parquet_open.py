@@ -21,6 +21,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from datar_polars_spark import sources
+from datar_polars_spark.plans.cache import context_memo
 from datar_polars_spark.scale.jsonio import read_json_file, write_json_file
 from datar_polars_spark.sources import read_parquet, write_parquet
 from datar_polars_spark.tibble import Tibble
@@ -44,9 +45,13 @@ def _job_group(spark):
         jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _clear_read_memo():
+    context_memo("read_parquet", sources._READ_MEMO_SIZE).clear()
+
+
 def _open(spark, path):
     """read_parquet past the memo: (Tibble, jobs run by the open)."""
-    sources._READ_MEMO.clear()
+    _clear_read_memo()
     with _job_group(spark) as jobs:
         td = read_parquet(spark, str(path))
     return td, jobs
@@ -137,7 +142,7 @@ def test_missing_and_empty_paths_raise_as_spark_does(spark, tmp_path):
     for p in (empty, tmp_path / "missing"):
         with pytest.raises(Exception) as want:
             spark.read.parquet(str(p))
-        sources._READ_MEMO.clear()
+        _clear_read_memo()
         with pytest.raises(type(want.value)):
             read_parquet(spark, str(p))
 
@@ -228,3 +233,31 @@ def test_read_json_file_runs_no_job(spark, tmp_path):
     empty.write_text("")
     with pytest.raises(ValueError, match="empty"):
         read_json_file(spark, str(empty))
+
+
+def test_nanos_convert_by_truncation_like_pyarrow(spark, tmp_path):
+    """TIMESTAMP(NANOS) -> microseconds truncates toward zero with
+    exact integer division, as pyarrow's cast does: a double-precision
+    division rounded ``12:00:00.000001999`` up to ``.000002`` (the
+    spacing of doubles near 2026 in microseconds is 0.25)."""
+    ns = pa.array(
+        [1_767_268_800_000_001_999, -1, -1_999, -631_152_000_000_001_999],
+        pa.int64(),
+    )
+    p = tmp_path / "ns_round.parquet"
+    pq.write_table(pa.table({"ts": ns.cast(pa.timestamp("ns"))}), p)
+    want = ns.cast(pa.timestamp("ns")).cast(
+        pa.timestamp("us"), safe=False
+    ).cast(pa.int64()).to_pylist()
+    assert want == [1_767_268_800_000_001, 0, -1, -631_152_000_000_001]
+    before = spark.conf.get(_NANOS_CONF, None)
+    spark.conf.unset(_NANOS_CONF)
+    try:
+        td, _jobs = _open(spark, p)
+        got = [r[0] for r in td.df.selectExpr("unix_micros(ts)").collect()]
+    finally:
+        if before is None:
+            spark.conf.unset(_NANOS_CONF)
+        else:
+            spark.conf.set(_NANOS_CONF, before)
+    assert got == want
